@@ -128,6 +128,8 @@ def check_queries(work, result):
     log("slowest: " + ", ".join(f"{q} {w:.2f}s" for q, _, w in slow))
     result["failed"] += len(bad)
     result["correct"] = result["correct"] and not bad
+    if "error_rate" in result["metrics"]:
+        result["metrics"]["error_rate"]["value"] = result["failed"] / result["attempted"]
 
 
 def main():

@@ -26,14 +26,18 @@ object CoraStore {
     "Neural_Networks", "Probabilistic_Methods", "Reinforcement_Learning",
     "Rule_Learning", "Theory")
 
-  /** Defaults follow the reference's `data4` graph 3 — CORA's 1,433 binary
+  /** The shape of the reference's `data4` graph 3 — CORA's 1,433 binary
     * features and 7 classes over 4 partitions, about 2 edges per node — at
     * half of CORA's 2,708 nodes, so a session fits the benchmark's run.
     */
-  final case class Shape(nodes: Int = 1354, parts: Int = 4,
-                         features: Int = 1433, edgesPerNode: Double = 2.0,
-                         cutShare: Double = 0.06, sameClass: Double = 0.85,
-                         topicWords: Int = 60, wordsPerNode: Int = 18)
+  val Parts = 4
+  private val Nodes = 1354
+  private val Features = 1433
+  private val EdgesPerNode = 2.0
+  private val CutShare = 0.06
+  private val SameClass = 0.85
+  private val TopicWords = 60
+  private val WordsPerNode = 18
 
   /** What was written: ids per partition, and the row counts the merge
     * scans (local plus centralstore attribute rows) and should keep.
@@ -47,39 +51,38 @@ object CoraStore {
       (l.toSet ++ c).size.toLong }.sum
   }
 
-  def generate(dir: File, graphId: String, seed: Long, shape: Shape = Shape()): Store = {
-    import shape._
+  def generate(dir: File, graphId: String, seed: Long): Store = {
     val rnd = new SplittableRandom(seed)
     val seen = mutable.HashSet.empty[Long]
-    val ids = Array.fill(nodes) {
+    val ids = Array.fill(Nodes) {
       var v = 0L
       while ({ v = 35L + rnd.nextLong(1200000L); !seen.add(v) }) ()
       v
     }
-    val cls = Array.fill(nodes)(rnd.nextInt(Labels.size))
-    val part = Array.tabulate(nodes)(_ % parts)
-    val topics = Array.fill(Labels.size)(Array.fill(topicWords)(rnd.nextInt(features)))
-    val feats = Array.tabulate(nodes) { i =>
-      val on = new java.util.BitSet(features)
-      for (w <- 0 until wordsPerNode) {
-        val f = if (w < wordsPerNode * 2 / 3) topics(cls(i))(rnd.nextInt(topicWords))
-                else rnd.nextInt(features)
+    val cls = Array.fill(Nodes)(rnd.nextInt(Labels.size))
+    val part = Array.tabulate(Nodes)(_ % Parts)
+    val topics = Array.fill(Labels.size)(Array.fill(TopicWords)(rnd.nextInt(Features)))
+    val feats = Array.tabulate(Nodes) { i =>
+      val on = new java.util.BitSet(Features)
+      for (w <- 0 until WordsPerNode) {
+        val f = if (w < WordsPerNode * 2 / 3) topics(cls(i))(rnd.nextInt(TopicWords))
+                else rnd.nextInt(Features)
         on.set(f)
       }
       on
     }
-    val byPart = (0 until parts).map(p => (0 until nodes).filter(part(_) == p).toArray)
-    val byPartClass = Array.tabulate(parts, Labels.size)((p, c) =>
+    val byPart = (0 until Parts).map(p => (0 until Nodes).filter(part(_) == p).toArray)
+    val byPartClass = Array.tabulate(Parts, Labels.size)((p, c) =>
       byPart(p).filter(cls(_) == c))
     val edges = mutable.LinkedHashSet.empty[(Int, Int)]
-    val target = (nodes * edgesPerNode).toInt
+    val target = (Nodes * EdgesPerNode).toInt
     while (edges.size < target) {
-      val s = rnd.nextInt(nodes)
+      val s = rnd.nextInt(Nodes)
       val t =
-        if (rnd.nextDouble() < cutShare) {
-          val others = byPart((part(s) + 1 + rnd.nextInt(parts - 1)) % parts)
+        if (rnd.nextDouble() < CutShare) {
+          val others = byPart((part(s) + 1 + rnd.nextInt(Parts - 1)) % Parts)
           others(rnd.nextInt(others.length))
-        } else if (rnd.nextDouble() < sameClass && byPartClass(part(s))(cls(s)).length > 1) {
+        } else if (rnd.nextDouble() < SameClass && byPartClass(part(s))(cls(s)).length > 1) {
           val pool = byPartClass(part(s))(cls(s))
           pool(rnd.nextInt(pool.length))
         } else byPart(part(s))(rnd.nextInt(byPart(part(s)).length))
@@ -90,12 +93,12 @@ object CoraStore {
     def attrLine(i: Int): String = {
       val sb = new StringBuilder().append(ids(i))
       var f = 0
-      while (f < features) { sb.append('\t').append(if (feats(i).get(f)) '1' else '0'); f += 1 }
+      while (f < Features) { sb.append('\t').append(if (feats(i).get(f)) '1' else '0'); f += 1 }
       sb.append('\t').append(Labels(cls(i))).toString
     }
     def edgeLine(e: (Int, Int)): String = s"${ids(e._1)} ${ids(e._2)}"
-    val pids = (0 until parts).map(_.toString)
-    val written = (0 until parts).map { p =>
+    val pids = (0 until Parts).map(_.toString)
+    val written = (0 until Parts).map { p =>
       val local = edges.filter(e => part(e._1) == p && part(e._2) == p).toSeq
       val cut = edges.filter(e => part(e._1) != part(e._2) &&
         (part(e._1) == p || part(e._2) == p)).toSeq

@@ -32,7 +32,7 @@ object FedSup {
     val missing = (1 to Rounds).filterNot(r =>
       new File(out, s"weights/weights_graphID:${GraphId}_V$r/_SUCCESS").isFile)
     val problems = Seq(
-      Option.when(aucs.size != CoraStore.Shape().parts)(s"${aucs.size} clients evaluated"),
+      Option.when(aucs.size != CoraStore.Parts)(s"${aucs.size} clients evaluated"),
       Option.when(!(auc > 0.5))(s"mean test AUC $auc is not above 0.5"),
       Option.when(result.clientRebuilds != 0)(s"${result.clientRebuilds} client rebuilds"),
       Option.when(missing.nonEmpty)(s"missing weight checkpoints for rounds $missing")).flatten
@@ -68,17 +68,22 @@ object FedSup {
         seed = SageHyperParams().seed)
       finally g.unpersist()
     }.failed.foreach(e => System.err.println(s"perfbench: warm-up failed: $e"))
-    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1000.0 - store.extraGenS
+    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1000.0
     engine.resetPeak()
     val t0 = System.nanoTime()
-    // A traced run makes one traced session and then one untraced session,
-    // the pair whose walls give the tracing overhead (later sessions still
-    // gain from JIT warm-up, so this order overstates it, if anything).
-    val traced = Option.when(ctx.traced)(Try(TracedFedSup.run(ctx, store, logger)))
-    val sessions =
-      if (!ctx.traced) runner.repeat(seconds)(runner.within(DeadlineS)(session()))
-      else if (runner.hung) Vector.empty
-      else Vector(runner.within(DeadlineS)(session()))
+    // A traced run makes two untraced sessions, the traced session and one
+    // more untraced session. Sessions still gain from JIT warm-up as a run
+    // goes on, fastest over the first, so the traced wall is compared with
+    // the mean of the untraced sessions right before and after it: that is
+    // the tracing overhead.
+    def untraced(k: Int) = (1 to k).iterator.takeWhile(_ => !runner.hung)
+      .map(_ => runner.within(DeadlineS)(session())).toVector
+    val before =
+      if (ctx.traced) untraced(2)
+      else runner.repeat(seconds)(runner.within(DeadlineS)(session()))
+    val traced = Option.when(ctx.traced && !runner.hung)(
+      Try(TracedFedSup.run(ctx, store, logger)))
+    val sessions = before ++ (if (ctx.traced) untraced(1) else Vector.empty)
     val timedS = Stats.seconds(t0)
     engine.flush()
     val peakMb = engine.peakTaskMem.get / 1048576.0
@@ -99,18 +104,20 @@ object FedSup {
     }
     (problems.flatten ++ tracedProblem).foreach(p => System.err.println(s"perfbench: $p"))
     val failed = problems.count(_.nonEmpty) + tracedProblem.size
+    val attempted = sessions.size + traced.size
     val walls = sessions.flatMap(_.toOption).map(_.wallS)
 
     val metrics = traced match {
       case None => Setup.endToEnd(setupS, walls, timedS, peakMb)
       case Some(t) => Layers.complete(t.toOption.toSeq.flatMap { t =>
+        val flanks = sessions.drop(1).flatMap(_.toOption).map(_.wallS)
         t.metrics :+ Metric("trace.overhead_frac",
-          if (walls.isEmpty) Double.NaN else t.wallS / walls.head - 1.0, "fraction")
+          if (flanks.isEmpty) Double.NaN else t.wallS / (flanks.sum / flanks.size) - 1.0, "fraction")
       } ++ Seq(
-        Metric("error_rate", failed.toDouble / (sessions.size + 1), "fraction"),
+        Metric("error_rate", failed.toDouble / attempted, "fraction"),
         Metric("storage_held_mb", Setup.storageHeldMb(ctx), "MB")))
     }
-    Report(sessions.size + traced.size, failed, metrics)
+    Report(attempted, failed, metrics)
   }
 }
 
@@ -127,7 +134,7 @@ object TracedFedSup {
 
   final case class Traced(metrics: Seq[Metric], wallS: Double, auc: Double)
 
-  def run(ctx: Ctx, store: Setup.Store, logger: GraftLogger): Traced = {
+  def run(ctx: Ctx, store: CoraStore.Store, logger: GraftLogger): Traced = {
     import ctx._
     val hp = SageHyperParams()
     val out = ctx.dir("traced")

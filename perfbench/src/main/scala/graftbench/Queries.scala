@@ -50,50 +50,51 @@ object Queries {
 
   def run(ctx: Ctx): Report = {
     import ctx._
-    val (corpus, extraGenS) = genCorpus(ctx)
+    val corpus = ctx.dir("corpus").getPath
+    Corpus.generate(spark, new File(corpus), seed)
     val order = new scala.util.Random(seed).shuffle(Measured)
     def pass(): Seq[(String, Try[Exec])] = order.takeWhile(_ => !runner.hung)
       .map(q => q -> runner.within(DeadlineS)(exec(spark, corpus, q)))
 
     pass().collect { case (q, Failure(e)) => System.err.println(s"perfbench: warm-up $q: $e") }
-    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1000.0 - extraGenS
+    val setupS = (System.currentTimeMillis() - jvmStartMs) / 1000.0
     engine.resetPeak()
     val t0 = System.nanoTime()
     val timed = runner.repeat(seconds)(pass()).flatten
     val timedS = Stats.seconds(t0)
     engine.flush()
     val peakMb = engine.peakTaskMem.get / 1048576.0
-    timed.collect { case (q, Failure(e)) => System.err.println(s"perfbench: $q: $e") }
-    val ok = timed.collect { case (_, Success(e)) => e }
-    val failed = timed.count(_._2.isFailure)
 
-    val traced = if (ctx.traced && !runner.hung) Some(Try(tracedPass(ctx, corpus, order, ok))) else None
+    // A traced run adds the traced pass and then one more untraced pass, so
+    // the tracing overhead compares the traced pass with untraced passes on
+    // both sides of it.
+    val traced = Option.when(ctx.traced && !runner.hung)(Try(tracedPass(ctx, corpus, order)))
+    val after = if (traced.isDefined && !runner.hung) pass() else Nil
     traced.flatMap(_.failed.toOption).foreach(e => System.err.println(s"perfbench: traced: $e"))
+    val untraced = timed ++ after
+    untraced.collect { case (q, Failure(e)) => System.err.println(s"perfbench: $q: $e") }
+    val ok = untraced.collect { case (_, Success(e)) => e }
     val tracedOk = traced.flatMap(_.toOption)
     writeRuns(new File(work, "query_runs.json"), corpus, ok ++ tracedOk.toSeq.flatMap(_._2))
+    val attempted = untraced.size + traced.map(_ => order.size).getOrElse(0)
+    val failed = untraced.count(_._2.isFailure) + traced.count(_.isFailure)
     val metrics =
       if (!ctx.traced) Setup.endToEnd(setupS, ok.map(_.wallS), timedS, peakMb)
-      else Layers.complete(tracedOk.map(_._1).getOrElse(Nil) ++ Seq(
-        Metric("error_rate", failed.toDouble / timed.size, "fraction"),
+      else Layers.complete(tracedOk.toSeq.flatMap { case (ms, execs) =>
+        ms :+ overhead(execs, ok) } ++ Seq(
+        Metric("error_rate", failed.toDouble / attempted, "fraction"),
         Metric("storage_held_mb", Setup.storageHeldMb(ctx), "MB")))
-    Report(timed.size + traced.map(_ => order.size).getOrElse(0),
-      failed + traced.count(_.isFailure), metrics)
+    Report(attempted, failed, metrics)
   }
 
-  /** Generate the corpus `Setup.GenRepeats` times, keep the first copy, and
-    * return its path and the generation time beyond the median.
+  /** Traced pass wall over untraced wall, less one, over the queries that
+    * have untraced samples; each query's untraced wall is its median.
     */
-  private def genCorpus(ctx: Ctx): (String, Double) = {
-    val runs = (1 to Setup.GenRepeats).map { k =>
-      val d = ctx.dir(s"corpus-$k")
-      val t0 = System.nanoTime()
-      Corpus.generate(ctx.spark, d, ctx.seed)
-      (d, Stats.seconds(t0))
-    }
-    runs.tail.foreach(r => Files.rm(r._1))
-    val gen = runs.map(_._2)
-    System.err.println(s"perfbench: corpus generation ${gen.map(g => f"$g%.2f").mkString(", ")} s")
-    (runs.head._1.getPath, gen.sum - Stats.median(gen))
+  private def overhead(traced: Seq[Exec], untraced: Seq[Exec]): Metric = {
+    val perQuery = untraced.groupBy(_.name).map { case (q, es) => q -> Stats.median(es.map(_.wallS)) }
+    val both = traced.filter(e => perQuery.contains(e.name))
+    Metric("trace.overhead_frac",
+      both.map(_.wallS).sum / both.map(e => perQuery(e.name)).sum - 1.0, "fraction")
   }
 
   /** One traced pass: per query a root span with `queries.build` (the query
@@ -101,8 +102,8 @@ object Queries {
     * below it; planning and execution time come from the
     * QueryExecutionListener, jobs from the SparkListener.
     */
-  private def tracedPass(ctx: Ctx, corpus: String, order: Seq[String],
-                         untraced: Seq[Exec]): (Seq[Metric], Seq[Exec]) = {
+  private def tracedPass(ctx: Ctx, corpus: String,
+                         order: Seq[String]): (Seq[Metric], Seq[Exec]) = {
     import ctx._
     val fromMs = System.currentTimeMillis()
     var buildJobs = 0
@@ -134,17 +135,14 @@ object Queries {
     val ids = execs.indices.map(_ + 1L).toSet
     val self = trace.selfSeconds(ids)
     val roots = trace.all.filter(s => ids(s.traceId) && s.name == "queries.query")
-    val perQuery = untraced.groupBy(_.name).map { case (q, es) => q -> Stats.median(es.map(_.wallS)) }
     val metrics = Seq(
       Metric("queries.build_s", self.getOrElse("queries.build", 0.0), "s"),
       Metric("queries.build_jobs", buildJobs.toDouble, "count"),
       Metric("queries.plan_s", planS, "s"),
       Metric("queries.exec_s", execS, "s")) ++
-      Layers.engine(window) ++ Seq(
-      Metric("trace.overhead_frac", execs.map(_.wallS).sum / order.map(perQuery).sum - 1.0,
-        "fraction"),
+      Layers.engine(window) :+
       Metric("trace.uncovered_frac", self.getOrElse("queries.query", 0.0) / roots.map(_.seconds).sum,
-        "fraction"))
+        "fraction")
     (metrics, execs)
   }
 

@@ -3,34 +3,9 @@ package graftbench
 /** Input generation and the end-to-end metrics every workload reports. */
 object Setup {
 
-  /** The generated store and the generation time counted beyond the median
-    * of its repeats (subtracted from `setup_s`).
-    */
-  final case class Store(dir: String, pids: Seq[String], nodeRowsScanned: Long,
-                         nodeRowsKept: Long, allIds: Set[Long], extraGenS: Double)
-
-  val GenRepeats = 3
-
-  /** Generate the seeded CORA-shaped store `GenRepeats` times into separate
-    * directories, require the copies to be byte-identical, and keep one.
-    */
-  def coraStore(ctx: Ctx): Store = {
-    val runs = (1 to GenRepeats).map { k =>
-      val d = ctx.dir(s"store-$k")
-      val t0 = System.nanoTime()
-      val s = CoraStore.generate(d, FedSup.GraphId, ctx.seed)
-      (d, s, Stats.seconds(t0))
-    }
-    val (dir, store, _) = runs.head
-    runs.tail.foreach { case (d, _, _) =>
-      require(Files.sameBytes(dir, d), s"store generation is not deterministic: $dir vs $d")
-      Files.rm(d)
-    }
-    val gen = runs.map(_._3)
-    System.err.println(s"perfbench: store generation ${gen.map(g => f"$g%.2f").mkString(", ")} s")
-    Store(dir.getPath, store.pids, store.nodeRowsScanned, store.nodeRowsKept, store.allIds,
-      gen.sum - Stats.median(gen))
-  }
+  /** The seeded CORA-shaped store the fed workloads read. */
+  def coraStore(ctx: Ctx): CoraStore.Store =
+    CoraStore.generate(ctx.dir("store"), FedSup.GraphId, ctx.seed)
 
   /** Storage memory still held by the session, in MB: leaked caches and
     * checkpoints show here.
