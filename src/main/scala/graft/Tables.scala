@@ -77,14 +77,12 @@ object Tables {
     */
   val EmbeddingDim: Int = 64
 
-  /** Cheap corpus-generation fingerprint (file count + max mtime under
-    * the sf dir). The ensure* fixture caches key their derived
-    * artifacts — z-ordered/manifested events copies, bucketed tables,
-    * sketch tables, the IVF-PQ index — on it, so a driver-side corpus
-    * regeneration MID-SESSION rebuilds them instead of serving rows
-    * from the previous corpus generation (the round-8 failure mode was
-    * a between-session regen; this closes the within-session variant).
-    * One directory listing per ensure* call — never a data read.
+  /** Cheap corpus-generation fingerprint: every file's (path, length,
+    * mtime) under the corpus dir, from one directory listing — never a
+    * data read. `util.Fixture` folds it into the key of every fixture
+    * derived from the corpus, so a regeneration (between sessions or
+    * mid-session) resolves to a new fixture directory instead of
+    * serving artifacts of the previous generation.
     */
   def corpusFingerprint(dir: String): String = {
     def walk(f: java.io.File): Iterator[java.io.File] =
@@ -106,28 +104,16 @@ object Tables {
       }
     s"${files.size}:$h"
   }
-
-  /** `corpusFingerprint` folded to 8 hex chars — for cache keys that
-    * must be valid SQL identifiers (bucketed table names) or short
-    * filesystem path segments.
-    */
-  def corpusFingerprintHex(dir: String): String =
-    f"${corpusFingerprint(dir).hashCode & 0xffffffffL}%08x"
-
-  /** Standard cache key for per-(process, sf) fixture TrieMaps:
-    * warehouse dir (per-process) + corpus dir + corpus generation.
-    */
-  def fixtureKey(s: SparkSession, dir: String): String =
-    s.conf.get("spark.sql.warehouse.dir") + "|" + dir + "|" + corpusFingerprint(dir)
 }
 
-/** Per-process-unique warehouse directories. The in-memory catalog is
-  * per-JVM while a fixed warehouse path persists across JVMs — that
-  * mismatch is how a second process on the same machine used to die
-  * with LOCATION_ALREADY_EXISTS on q42's bucketed tables. Layout's
-  * writeBucketed is now idempotent regardless (the library-surface
-  * fix); unique dirs here are defense in depth for the harnesses, and
-  * a shutdown hook keeps /tmp from accumulating one warehouse per run.
+/** Per-process-unique temp directories (Spark warehouses, spec
+  * corpora). The in-memory catalog is per-JVM while a fixed warehouse
+  * path persists across JVMs — that mismatch is how a second process
+  * on the same machine used to die with LOCATION_ALREADY_EXISTS on a
+  * managed bucketed table. Layout's writeBucketed is idempotent
+  * regardless (the library-surface fix); unique dirs here are defense
+  * in depth, and a shutdown hook keeps /tmp from accumulating one
+  * directory per run. Query fixtures do not live here (`util.Fixture`).
   */
 object TempWarehouse {
   def dir(prefix: String): String = {
@@ -150,8 +136,9 @@ object GraftSession {
     * defaults it on; the next legacy flag would not be). local[N]
     * stand-in for a real cluster: shuffle partitions sized to cores,
     * AQE on for runtime re-planning (skew joins, partition coalescing
-    * at scale). `warehousePrefix` keeps each main's managed tables
-    * (q42's bucketed layout) in its own per-process tmp dir.
+    * at scale). `warehousePrefix` keeps each main's managed tables in
+    * its own per-process tmp dir (the queries' layout copies are
+    * `util.Fixture` directories instead).
     */
   def local(cores: Int = 4, app: String = "graft",
             warehousePrefix: String = "graft-warehouse"): SparkSession =

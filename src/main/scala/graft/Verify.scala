@@ -16,10 +16,6 @@ object Verify {
       warehousePrefix = "graft-warehouse-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // fixture-reading oracles must point at THIS sf's fixtures (the
-    // queries materialize them below, before the oracle SQL is dumped)
-    raw"sf[0-9.]+".r.findFirstIn(sfDir)
-      .foreach(graft.queries.LlmQueries.oracleSfName = _)
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .foreach { case (name, fn) =>
@@ -29,6 +25,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
+    // fixture-reading oracles resolve to the fixtures the queries above
+    // just read (util.Fixture.path), so the dump must come after them
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -220,24 +220,18 @@ object Bpe {
     vocabBcCache.computeIfAbsent(spark.sparkContext,
       sc => sc.broadcast(new BpeVocab(TableMerges.toArray, TableMaxLen)))
 
-  /** Where the merges parquet lives — STATIC (vocab-only, no SF), so
-    * oracle SQL can embed it before any query runs.
-    */
-  def staticMergesPath: String =
-    s"${sys.props("java.io.tmpdir")}/graft-fixtures/bpe_merges_n${TableSize}_v$TableVersion"
-
   /** Persist the merge table once as (rank, a, b, ab) parquet — the
     * SINGLE SOURCE the DuckDB oracle replays (sqlTableCtes reads this
     * exact file, so the cross-engine check covers the table content,
-    * not just the algorithm).
+    * not just the algorithm). Vocab-only: keyed by the table's size and
+    * version, never by a corpus.
     */
   def mergesParquet(spark: SparkSession): String = {
     import spark.implicits._
-    Multimodal.materializeOnce(spark, staticMergesPath)(
+    graft.util.Fixture.generated("bpe_merges", TableVersion, TableSize)(
       spark.createDataset(TableMerges.zipWithIndex.map {
         case ((a, b), i) => (i, a, b, a + b)
-      }).toDF("rank", "a", "b", "ab").coalesce(1))
-    staticMergesPath
+      }).toDF("rank", "a", "b", "ab").coalesce(1).write.parquet(_))
   }
 
   /** Model-token count under the PRODUCTION table: a codegen'd
@@ -276,7 +270,7 @@ object Bpe {
     */
   def sqlTableCtes: String =
     s"""wd AS (SELECT DISTINCT word FROM occ WHERE length(word) > 0),
-          m AS (SELECT rank, a, b, ab FROM read_parquet('$staticMergesPath/*.parquet')),
+          m AS (SELECT rank, a, b, ab FROM read_parquet('${graft.util.Fixture.path("bpe_merges")}/*.parquet')),
           lens AS (SELECT unnest(range(2, ${TableMaxLen + 1})) AS l),
           pos AS (SELECT word, unnest(range(1, length(word) + 1)) AS i FROM wd),
           subs AS (

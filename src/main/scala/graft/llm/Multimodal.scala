@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.util.Fixture
+
 /** Multimodal columns: image/audio/video payloads carried as opaque
   * `BINARY` columns with typed metadata, plus the Spark-side plumbing
   * for decode / feature-extract / resize / frame-sample.
@@ -368,68 +370,28 @@ object Multimodal {
       }(enc)
   }
 
-  /** Persist the distributed fixture as parquet (once per target path)
+  /** Persist the distributed fixture as parquet (once per (n, seed))
     * and read it back — q32 measures the pipeline over a real parquet
-    * scan, not in-memory generation. Content is seed-deterministic, so
-    * an existing fixture is always valid to reuse.
+    * scan, not in-memory generation.
     */
-  def fixtureParquet(spark: SparkSession, path: String, n: Long, seed: Long = 42L): DataFrame =
-    materializeOnce(spark, path + fixtureKey(n, seed))(
-      syntheticFixtureDistributed(spark, n, seed))
+  def fixtureParquet(spark: SparkSession, n: Long, seed: Long = 42L): DataFrame =
+    spark.read.parquet(Fixture.generated("multimodal", fixtureGenVersion, n, seed)(
+      syntheticFixtureDistributed(spark, n, seed).write.parquet(_)))
 
   /** Generator version bumped whenever pngBytes/wavBytes/synthetic
-    * recipes change, so a persisted fixture can never silently go
-    * stale — the key IS the content formula. */
-  private[graft] val fixtureGenVersion = 2
+    * recipes change: part of every media fixture's key. */
+  private val fixtureGenVersion = 2
 
-  /** Path suffix encoding everything the fixture bytes depend on. */
-  private[graft] def fixtureKey(n: Long, seed: Long): String =
-    s"_n${n}_s${seed}_v$fixtureGenVersion"
-
-  /** Materialize `build` at `path` exactly once, safely under
-    * concurrent sessions sharing java.io.tmpdir: write to a private
-    * temp dir, then rename into place — a loser of the race just
-    * deletes its copy and reads the winner's (content is
-    * seed-deterministic, so any complete fixture is THE fixture).
-    *
-    * Hadoop `rename` does NOT fail when the destination directory
-    * already exists: HDFS and RawLocalFileSystem apply posix-mv
-    * semantics, moving tmp INSIDE the destination as a child dir and
-    * returning true — so a race loser's `!rename → delete tmp` branch
-    * never fired and `spark.read.parquet` double-counted the nested
-    * copy (round-13 advice). Rename now happens only into ABSENCE
-    * (re-checked after the write), and a nested-copy sweep covers the
-    * residual check→rename window.
-    */
-  private[graft] def materializeOnce(spark: SparkSession, path: String)
-                                    (build: => DataFrame): DataFrame = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val success = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(success)) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        path + ".tmp-" + java.util.UUID.randomUUID.toString)
-      build.write.mode("overwrite").parquet(tmp.toString)
-      if (fs.exists(target) && !fs.exists(success))
-        fs.delete(target, true) // crashed partial write: clear it
-      // a complete target can only (re)appear via a winner's rename
-      // (which carries _SUCCESS atomically with the dir move), so
-      // "success exists" ⇔ "lost the race": discard this copy
-      val renamed = !fs.exists(success) && fs.rename(tmp, target)
-      if (!renamed) fs.delete(tmp, true)
-      // residual exists-check → rename window: if another writer won
-      // INSIDE it, our rename nested tmp under the winner's target —
-      // remove the duplicate child so the read below counts each row once
-      val nested = new org.apache.hadoop.fs.Path(target, tmp.getName)
-      if (renamed && fs.exists(nested)) fs.delete(nested, true)
-    }
-    spark.read.parquet(path)
+  /** Write `row(id)` for the ids `0 until n` as parquet at `out`. */
+  private def writeRows(spark: SparkSession, n: Long, out: String)(row: Long => Row): Unit = {
+    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
+    spark.range(n).select(col("id")).mapPartitions(_.map(r => row(r.getLong(0))))(enc)
+      .write.parquet(out)
   }
 
-  /** Deterministic image-ONLY fixture of real PNG payloads with
-    * planted perceptual near-duplicates, persisted once per path —
-    * the q119 input. Per decade of ids: rows ≡ 0..7 (mod 10) are
-    * distinct seeded gray-noise images; row ≡ 8 is a ONE-PIXEL
+  /** Deterministic image-ONLY input of real PNG payloads with
+    * planted perceptual near-duplicates — the q119 input. Per decade
+    * of ids: rows ≡ 0..7 (mod 10) are distinct seeded gray-noise images; row ≡ 8 is a ONE-PIXEL
     * brightening of row ≡ 0's image (a genuine near-twin: identical
     * to the eye, pHash a few bits off at most); row ≡ 9 is a
     * byte-exact PNG copy of row ≡ 0 (Hamming 0 guaranteed). Encoding
@@ -437,20 +399,20 @@ object Multimodal {
     * persisted parquet (not re-encoding) anchors determinism across
     * runs.
     */
-  def imageFixtureParquet(spark: SparkSession, path: String, n: Long,
-                          seed: Long = 42L): DataFrame =
-    materializeOnce(spark, path + fixtureKey(n, seed)) {
-      val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-      spark.range(n).select(col("id")).mapPartitions { rows =>
-        rows.map { r =>
-          val i = r.getLong(0)
-          val cls = (i % 10).toInt
-          val base = cls match { case 8 => i - 8; case 9 => i - 9; case _ => i }
-          Row(i, "image", pngBytes(base, seed, perturb = cls == 8),
-            Map("width" -> "64", "height" -> "48", "codec" -> "png"))
-        }
-      }(enc)
+  def writeImages(spark: SparkSession, n: Long, seed: Long, out: String): Unit =
+    writeRows(spark, n, out) { i =>
+      Row(i, "image", pngBytes(plantedBase(i), seed, perturb = i % 10 == 8),
+        Map("width" -> "64", "height" -> "48", "codec" -> "png"))
     }
+
+  /** [[writeImages]] once per (n, seed) as a fixture; its directory. */
+  def imageFixtureParquet(spark: SparkSession, n: Long, seed: Long = 42L): String =
+    Fixture.generated("images", fixtureGenVersion, n, seed)(writeImages(spark, n, seed, _))
+
+  /** Rows ≡ 8 and 9 (mod 10) copy row ≡ 0 of their decade. */
+  private def plantedBase(i: Long): Long = (i % 10).toInt match {
+    case 8 => i - 8; case 9 => i - 9; case _ => i
+  }
 
   private[graft] def pngBytes(base: Long, seed: Long, perturb: Boolean): Array[Byte] = {
     val w = 64; val h = 48
@@ -476,53 +438,42 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Deterministic audio-ONLY fixture of real 16-bit PCM mono WAV
+  /** Deterministic audio-ONLY input of real 16-bit PCM mono WAV
     * payloads with planted perceptual near-duplicates — q126's input,
-    * the audio sibling of [[imageFixtureParquet]]. Waveforms are
+    * the audio sibling of [[writeImages]]. Waveforms are
     * integer triangle-wave mixes (no transcendentals — byte-exact on
     * any JVM); per decade: rows ≡ 0..7 distinct, row ≡ 8 adds a small
     * constant offset to the first envelope bin's samples of row ≡ 0's
     * waveform (a genuine near-twin — inaudible level shift, envelope
     * pHash a few bits off at most), row ≡ 9 is a byte-exact WAV copy.
     */
-  def audioFixtureParquet(spark: SparkSession, path: String, n: Long,
-                          seed: Long = 42L): DataFrame =
-    materializeOnce(spark, path + fixtureKey(n, seed)) {
-      val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-      spark.range(n).select(col("id")).mapPartitions { rows =>
-        rows.map { r =>
-          val i = r.getLong(0)
-          val cls = (i % 10).toInt
-          val base = cls match { case 8 => i - 8; case 9 => i - 9; case _ => i }
-          Row(i, "audio", wavBytes(base, seed, perturb = cls == 8),
-            Map("rate" -> "8000", "bits" -> "16", "codec" -> "pcm_s16le"))
-        }
-      }(enc)
+  def writeAudio(spark: SparkSession, n: Long, seed: Long, out: String): Unit =
+    writeRows(spark, n, out) { i =>
+      Row(i, "audio", wavBytes(plantedBase(i), seed, perturb = i % 10 == 8),
+        Map("rate" -> "8000", "bits" -> "16", "codec" -> "pcm_s16le"))
     }
 
-  /** Deterministic video-ONLY fixture of GVID motion-PNG payloads
+  /** [[writeAudio]] once per (n, seed) as a fixture; its directory. */
+  def audioFixtureParquet(spark: SparkSession, n: Long, seed: Long = 42L): String =
+    Fixture.generated("audio", fixtureGenVersion, n, seed)(writeAudio(spark, n, seed, _))
+
+  /** Deterministic video-ONLY input of GVID motion-PNG payloads
     * (4 real PNG frames per video) with planted perceptual
     * near-duplicates — q140's input, the video sibling of
-    * [[imageFixtureParquet]]. Per decade: rows ≡ 0..7 distinct seeded
+    * [[writeImages]]. Per decade: rows ≡ 0..7 distinct seeded
     * noise videos; row ≡ 8 perturbs one pixel of FRAME 0 of row ≡ 0's
     * video (a genuine near-twin — the 4-frame mean dilutes it to a
     * sub-bit raster shift); row ≡ 9 is a byte-exact container copy.
     */
-  def videoFixtureParquet(spark: SparkSession, path: String, n: Long,
-                          seed: Long = 42L): DataFrame =
-    materializeOnce(spark, path + fixtureKey(n, seed)) {
-      val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema)
-      spark.range(n).select(col("id")).mapPartitions { rows =>
-        rows.map { r =>
-          val i = r.getLong(0)
-          val cls = (i % 10).toInt
-          val base = cls match { case 8 => i - 8; case 9 => i - 9; case _ => i }
-          Row(i, "video", gvidBytes(base, seed, perturb = cls == 8),
-            Map("width" -> "64", "height" -> "48", "frames" -> "4",
-              "codec" -> "gvid-png"))
-        }
-      }(enc)
+  def writeVideo(spark: SparkSession, n: Long, seed: Long, out: String): Unit =
+    writeRows(spark, n, out) { i =>
+      Row(i, "video", gvidBytes(plantedBase(i), seed, perturb = i % 10 == 8),
+        Map("width" -> "64", "height" -> "48", "frames" -> "4", "codec" -> "gvid-png"))
     }
+
+  /** [[writeVideo]] once per (n, seed) as a fixture; its directory. */
+  def videoFixtureParquet(spark: SparkSession, n: Long, seed: Long = 42L): String =
+    Fixture.generated("video", fixtureGenVersion, n, seed)(writeVideo(spark, n, seed, _))
 
   /** GVID container: "GVID" + int32 frame count + per frame
     * (int32 length + PNG bytes). Frames are seeded noise PNGs;
@@ -581,15 +532,18 @@ object Multimodal {
     bos.toByteArray
   }
 
-  /** Decode `fixture` with `decoder` and persist (id, feature) once —
-    * the cross-engine anchor for perceptual dedup: the DuckDB oracle
+  /** Decode the media fixture at `fixture` with a `RealDecoder(grid)`
+    * and persist (id, feature) once as the fixture `name` — the
+    * cross-engine anchor for perceptual dedup: the DuckDB oracle
     * recomputes everything DOWNSTREAM of the codec (quantization,
     * pHash bits, blocked pair join) from this parquet, while the
     * codec itself is spec-pinned on generated PNG/WAV payloads
     * (MultimodalSpec / PhashNearDupSpec).
     */
-  def decodedRasterParquet(spark: SparkSession, path: String,
-                           fixture: => DataFrame, decoder: MediaDecoder): DataFrame =
-    materializeOnce(spark, path + s"_v$fixtureGenVersion")(
-      decodeFeatures(fixture, decoder).select(col("id"), col("feature")))
+  def decodedRasterParquet(spark: SparkSession, name: String, fixture: String,
+                           grid: Int): DataFrame =
+    spark.read.parquet(Fixture.generated(name, fixtureGenVersion,
+        new java.io.File(fixture).getName, grid)(
+      decodeFeatures(spark.read.parquet(fixture), new RealDecoder(grid))
+        .select(col("id"), col("feature")).write.parquet(_)))
 }

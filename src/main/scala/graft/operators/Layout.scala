@@ -8,10 +8,14 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Persist `df` as a bucketed+sorted managed table. Joins and
+  /** Persist `df` as a bucketed+sorted table. Joins and
     * aggregations between tables bucketed the same way on the same
     * keys run with ZERO shuffle — the co-located-join layout for fact
     * tables that are joined repeatedly on the same key.
+    *
+    * A managed table by default; with `location`, an external table
+    * whose files live there and survive a DROP, so any later session
+    * can register them again (`CREATE TABLE … CLUSTERED BY … LOCATION`).
     *
     * Idempotent ACROSS PROCESSES, not just within a session: the
     * in-memory catalog dies with the JVM but the warehouse directory
@@ -23,23 +27,23 @@ object Layout {
     * then write.
     */
   def writeBucketed(df: DataFrame, table: String, buckets: Int,
-                    keys: Seq[String]): Unit = {
+                    keys: Seq[String], location: Option[String] = None): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
     // A location orphaned by a prior process is not covered by the DROP
     // (the catalog never knew it). Resolve where saveAsTable will put
-    // the managed table and remove any leftover — via the Hadoop FS API
-    // so an HDFS/S3 warehouse behaves the same as local /tmp.
+    // the table and remove any leftover — via the Hadoop FS API so an
+    // HDFS/S3 warehouse behaves the same as local /tmp.
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(ident))
+    val loc = location.map(new org.apache.hadoop.fs.Path(_)).getOrElse(
+      new org.apache.hadoop.fs.Path(spark.sessionState.catalog.defaultTablePath(ident)))
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode("overwrite")
+    val w = df.write.mode("overwrite")
       .bucketBy(buckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
-      .saveAsTable(table)
+    location.fold(w)(w.option("path", _)).saveAsTable(table)
   }
 
   /** Drop a bucketed table and its on-disk location, whether or not the

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.util.Fixture
 import graft.llm.{Bpe, CorpusDedup, Embeddings, Multimodal, NearDup, Phash, Pq, Similarity, TextOps, TrainingSet}
 
 /** LLM training-data pipeline operators as first-class, oracle-checked
@@ -29,7 +30,7 @@ import graft.llm.{Bpe, CorpusDedup, Embeddings, Multimodal, NearDup, Phash, Pq, 
   */
 object LlmQueries {
 
-  /** One persisted IVF-PQ index over `embeddings` per (process, sf) —
+  /** The persisted IVF-PQ index over `embeddings` —
     * coarse quantizer (k=16, half-sample trained) + PQ codebooks
     * (m=8, k=16) + coded corpus written once via `Pq.saveIndex` (the
     * q42/q54/q57 build-once-artifact pattern; bench warm-up
@@ -37,14 +38,8 @@ object LlmQueries {
     * trainings are independent — overlapped from driver threads (both
     * internally seeded, so scheduling cannot change either result).
     */
-  private val ivfPqIndexPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ensureIvfPqIndex(s: SparkSession, dir: String): String =
-    ivfPqIndexPaths.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        .replace(".", "_")
-      val path = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        s"/graft_ivfpq_${sfName}_${Tables.corpusFingerprintHex(dir)}"
+  private def ivfPqIndex(s: SparkSession, dir: String): String =
+    Fixture.corpus("ivfpq", 1, dir) { path =>
       val emb = Tables(s, dir).embeddings
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.global
@@ -57,8 +52,7 @@ object LlmQueries {
         scala.concurrent.duration.Duration.Inf)
       Pq.saveIndex(path, Pq.indexIvfPq(emb, "vec_id", "embedding", coarse, cb),
         coarse, cb)
-      path
-    })
+    }
 
   // DuckDB twin of TextOps.tokens — kept next to the Scala so the two
   // tokenizers evolve together.
@@ -517,10 +511,7 @@ object LlmQueries {
     // inside the pipeline (it IS the dedup key); MultimodalSpec
     // additionally asserts exact decode outputs.
     "q32_multimodal" -> ((s, dir) => {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      val n = math.max(60L, (20000 * sfOf(dir)).toLong)
-      val fixture = Multimodal.fixtureParquet(s,
-        s"${sys.props("java.io.tmpdir")}/graft-fixtures/multimodal_$sfName", n)
+      val fixture = Multimodal.fixtureParquet(s, mediaFixtureN(dir))
       val decoded = Multimodal.decodeFeatures(
         Multimodal.frameSample(fixture, stride = 2), new Multimodal.FakeDecoder(8))
       decoded
@@ -605,7 +596,7 @@ object LlmQueries {
     // trained coarse quantizer routes each vector to an inverted list,
     // PQ codes (m=8 of 64 dims, 32× compression) store it, and a query
     // ADC-scans only its nProbe = 4 of 16 probed lists. Round 8: the
-    // index is PERSISTED (Pq.saveIndex, built once per (process, sf)
+    // index is PERSISTED (Pq.saveIndex, built once per corpus
     // like the q42/q54/q57 layout artifacts) and the query path reads
     // the STORED index — codes scanned from parquet, codebooks loaded
     // as driver metadata — the way a real ANN service serves: build
@@ -618,7 +609,7 @@ object LlmQueries {
     // (≡ full ADC at nProbe = all).
     "q48_ivfpq_probe" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val (codes, coarse, cb) = Pq.loadIndex(s, ensureIvfPqIndex(s, dir))
+      val (codes, coarse, cb) = Pq.loadIndex(s, ivfPqIndex(s, dir))
       Pq.ivfPqTopK(codes, t.embeddings.filter(col("vec_id") < 10), coarse, cb,
         k = 5, nProbe = 4)
     }),
@@ -810,10 +801,7 @@ object LlmQueries {
     // files via read_json (q32's shared-fixture pattern), so the
     // parse itself — not just downstream math — is cross-checked.
     "q83_jsonl_ingest" -> ((s, dir) => {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      val n = math.max(60L, (20000 * sfOf(dir)).toLong)
-      val path = graft.sources.JsonlIO.fixtureJsonl(s,
-        s"${sys.props("java.io.tmpdir")}/graft-fixtures/jsonl_$sfName", n)
+      val path = graft.sources.JsonlIO.fixtureJsonl(s, mediaFixtureN(dir))
       graft.sources.JsonlIO.read(s, path, graft.sources.JsonlIO.FixtureSchema)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -948,7 +936,7 @@ object LlmQueries {
     "q97_pca_project" -> ((s, dir) => {
       val t = Tables(s, dir)
       val emb = t.embeddings
-      val fixture = ensurePcaFixture(s, dir)
+      val fixture = pcaFixture(s, dir)
       emb.select(col("vec_id"),
           posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "__x")))
         .join(broadcast(s.read.parquet(fixture)), Seq("dim"))
@@ -1248,13 +1236,8 @@ object LlmQueries {
     // once (persisted), the pair join shuffles 4 skinny (block, value)
     // rows per image — never all-pairs, never the payload bytes.
     "q119_phash_image_neardup" -> ((s, dir) => {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      val n = math.max(60L, (20000 * sfOf(dir)).toLong)
-      val fixDir = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-      val decoded = Multimodal.decodedRasterParquet(
-        s, s"$fixDir/images_decoded_${sfName}_n$n",
-        Multimodal.imageFixtureParquet(s, s"$fixDir/images_$sfName", n),
-        new Multimodal.RealDecoder(8))
+      val decoded = Multimodal.decodedRasterParquet(s, "images_decoded",
+        Multimodal.imageFixtureParquet(s, mediaFixtureN(dir)), grid = 8)
       Phash.pairs(decoded, "id", "feature", maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
     }),
@@ -1269,13 +1252,8 @@ object LlmQueries {
     // forces the exact pair set from the envelope parquet; the codec
     // is spec-pinned (PhashNearDupSpec audio cases).
     "q126_phash_audio_neardup" -> ((s, dir) => {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      val n = math.max(60L, (20000 * sfOf(dir)).toLong)
-      val fixDir = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-      val decoded = Multimodal.decodedRasterParquet(
-        s, s"$fixDir/audio_decoded_${sfName}_n$n",
-        Multimodal.audioFixtureParquet(s, s"$fixDir/audio_$sfName", n),
-        new Multimodal.RealDecoder(8))
+      val decoded = Multimodal.decodedRasterParquet(s, "audio_decoded",
+        Multimodal.audioFixtureParquet(s, mediaFixtureN(dir)), grid = 8)
       Phash.pairs(decoded, "id", "feature", maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
     }),
@@ -1289,13 +1267,8 @@ object LlmQueries {
     // then the identical pHash pigeonhole. Same shared-raster-parquet
     // oracle discipline as q119/q126.
     "q140_phash_video_neardup" -> ((s, dir) => {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      val n = math.max(60L, (20000 * sfOf(dir)).toLong)
-      val fixDir = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-      val decoded = Multimodal.decodedRasterParquet(
-        s, s"$fixDir/video_decoded_${sfName}_n$n",
-        Multimodal.videoFixtureParquet(s, s"$fixDir/video_$sfName", n),
-        new Multimodal.RealDecoder(8))
+      val decoded = Multimodal.decodedRasterParquet(s, "video_decoded",
+        Multimodal.videoFixtureParquet(s, mediaFixtureN(dir)), grid = 8)
       Phash.pairs(decoded, "id", "feature", maxDist = 3)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
     }),
@@ -1481,15 +1454,15 @@ object LlmQueries {
       val corpus = q121Corpus(t)
       val heldout = t.documents.filter(pmod(col("doc_id"), lit(20)) === 0)
         .select(col("doc_id"), col("text"))
-      // the LSH clean stage is amortized per (process, corpus) — the
+      // the LSH clean stage is amortized per corpus — the
       // q97 PCA-fixture pattern: clean is deterministic, bench
       // iterations 2..n reuse run 1's kept-id parquet, and the oracle
       // still recomputes the stage from raw text every time
       TrainingSet.build(corpus, heldout, "doc_id", "text", "lang",
           minQuality = 7.0, budgets = Map("en" -> 4000L), defaultBudget = 1500L,
-          threshold = 0.6, shingleN = 3, numHashes = 48, bands = 16,
-          decontaminateN = 5,
-          precleanedIds = Some(s.read.parquet(ensureQ121CleanFixture(s, dir))))
+          threshold = q121Threshold, shingleN = q121Shingle, numHashes = q121Hashes,
+          bands = q121Bands, decontaminateN = 5,
+          precleanedIds = Some(s.read.parquet(q121CleanFixture(s, dir))))
         .select(col("doc_id"), col("lang"), col("split"),
           col("n_tokens").cast("long").as("n_tokens"), col("admitted"))
     }),
@@ -1530,7 +1503,7 @@ object LlmQueries {
     // different geometry, zero float-construction risk — reverse
     // commutes with the double cast elementwise).
     "q142_ivf_append" -> ((s, dir) => {
-      val (centPath, _) = ensureIvfIndexFixture(s, dir)
+      val Seq(centPath) = parts(ivfIndexFixture(s, dir), "centroids")
       graft.llm.IvfIncremental.assignBatch(
         ivfBatch(Tables(s, dir)), s.read.parquet(centPath))
     }),
@@ -1545,7 +1518,7 @@ object LlmQueries {
     // from the text-embedding geometry, so drift is materially nonzero
     // — an all-zero audit could not distinguish working from vacuous.
     "q143_ivf_drift" -> ((s, dir) => {
-      val (centPath, statsPath) = ensureIvfIndexFixture(s, dir)
+      val Seq(centPath, statsPath) = parts(ivfIndexFixture(s, dir), "centroids", "stats")
       val asgn = graft.llm.IvfIncremental.assignBatch(
         ivfBatch(Tables(s, dir)), s.read.parquet(centPath))
       graft.llm.IvfIncremental.driftAudit(asgn, s.read.parquet(statsPath))
@@ -1570,9 +1543,9 @@ object LlmQueries {
         .select(col("doc_id"), col("text"))
       TrainingSet.build(q121Corpus(t), heldout, "doc_id", "text", "lang",
           minQuality = 7.0, budgets = Map("en" -> 4000L), defaultBudget = 1500L,
-          threshold = 0.6, shingleN = 3, numHashes = 48, bands = 16,
-          decontaminateN = 5,
-          precleanedIds = Some(s.read.parquet(ensureQ121CleanFixture(s, dir))),
+          threshold = q121Threshold, shingleN = q121Shingle, numHashes = q121Hashes,
+          bands = q121Bands, decontaminateN = 5,
+          precleanedIds = Some(s.read.parquet(q121CleanFixture(s, dir))),
           release = Some(TrainingSet.Release(
             quasiCols = Seq("lang", "split"), valueCol = "n_tokens",
             widths = Seq(10L, 50L, 200L), k = 8L,
@@ -1603,7 +1576,7 @@ object LlmQueries {
       // the 1-row stats parquet (n_docs, tot_len) — the only driver
       // action here is that metadata-sized head(); no corpus scan, no
       // re-tokenize (round-15 fix of the r14 weak flag)
-      val (idfP, postP, lensP, statsP) = ensureBm25IndexFixture(s, dir)
+      val Seq(idfP, postP, lensP, statsP) = parts(bm25IndexFixture(s, dir), "idf", "postings", "lens", "stats")
       val st = s.read.parquet(statsP).head()
       val index = graft.llm.Bm25Index(
         s.read.parquet(postP), s.read.parquet(lensP),
@@ -1852,7 +1825,7 @@ object LlmQueries {
     // subspace). The base corpus is never re-read (PqIncrementalSpec
     // pins the plan).
     "q157_pq_append" -> ((s, dir) => {
-      val (cbPath, _) = ensurePqIncFixture(s, dir)
+      val Seq(cbPath) = parts(pqIncFixture(s, dir), "codebooks")
       graft.llm.PqIncremental.encodeBatch(
           ivfBatch(Tables(s, dir)), s.read.parquet(cbPath), dim = 64, m = 8)
         .select(col("vec_id"), col("subspace"), col("code"),
@@ -1867,7 +1840,7 @@ object LlmQueries {
     // did — the re-train signal. The reversed-vector batch lands far
     // from the per-subspace geometry, so drift is materially nonzero.
     "q158_pq_drift" -> ((s, dir) => {
-      val (cbPath, statsPath) = ensurePqIncFixture(s, dir)
+      val Seq(cbPath, statsPath) = parts(pqIncFixture(s, dir), "codebooks", "stats")
       val enc = graft.llm.PqIncremental.encodeBatch(
         ivfBatch(Tables(s, dir)), s.read.parquet(cbPath), dim = 64, m = 8)
       graft.llm.PqIncremental.driftAudit(enc, s.read.parquet(statsPath))
@@ -1887,7 +1860,7 @@ object LlmQueries {
     "q159_hybrid_rrf" -> ((s, dir) => {
       val t = Tables(s, dir)
       val qIds = Seq(1L, 7L, 19L, 29L, 41L)
-      val (idfP, postP, lensP, statsP) = ensureBm25IndexFixture(s, dir)
+      val Seq(idfP, postP, lensP, statsP) = parts(bm25IndexFixture(s, dir), "idf", "postings", "lens", "stats")
       val st = s.read.parquet(statsP).head()
       val bm = graft.llm.Bm25.topK(
           graft.llm.Bm25Index(s.read.parquet(postP), s.read.parquet(lensP),
@@ -1926,7 +1899,7 @@ object LlmQueries {
     // language, so both set-union components are demonstrably live.
     "q160_incremental_datasheet" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val (sc, hi, la, ha) = ensureCorpusStatsFixture(s, dir)
+      val Seq(sc, hi, la, ha) = parts(corpusStatsFixture(s, dir), "scalars", "hist", "langs", "hashes")
       val base = graft.llm.CorpusStatsState(s.read.parquet(sc),
         s.read.parquet(hi), s.read.parquet(la), s.read.parquet(ha))
       graft.llm.CorpusStats.card(graft.llm.CorpusStats.merge(base,
@@ -1971,7 +1944,7 @@ object LlmQueries {
     "q162_incremental_spans" -> ((s, dir) => {
       val t = Tables(s, dir)
       graft.llm.ExactSubstr.cutListIncremental(spanBatch(t),
-        s.read.parquet(ensureGramIndexFixture(s, dir)), L = 8)
+        s.read.parquet(gramIndexFixture(s, dir)), L = 8)
     }),
 
     // SPAN-CLEANED CORPUS — q156's cut lists APPLIED: every duplicated
@@ -1997,7 +1970,7 @@ object LlmQueries {
     // corpus scale.
     "q164_gram_index_growth" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val idx = s.read.parquet(ensureGramIndexFixture(s, dir))
+      val idx = s.read.parquet(gramIndexFixture(s, dir))
         .select(col("gram"))
       val batchGrams = graft.llm.ExactSubstr.gramTable(spanBatch(t), L = 8)
         .select(col("gram")).distinct()
@@ -2034,7 +2007,7 @@ object LlmQueries {
       val batch = spanBatch(t)
       graft.llm.ExactSubstr.applyCuts(batch,
           graft.llm.ExactSubstr.cutListIncremental(batch,
-            s.read.parquet(ensureGramIndexFixture(s, dir)), L = 8))
+            s.read.parquet(gramIndexFixture(s, dir)), L = 8))
         .select(col("doc_id"),
           length(col("clean_text")).cast("long").as("clean_len"),
           md5(col("clean_text")).as("clean_md5"))
@@ -2101,7 +2074,7 @@ object LlmQueries {
     // new-vocabulary batch docs.
     "q170_bm25_merged" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val (idfP, postP, lensP, statsP) = ensureBm25MergedFixture(s, dir)
+      val Seq(idfP, postP, lensP, statsP) = parts(bm25MergedFixture(s, dir), "idf", "postings", "lens", "stats")
       val st = s.read.parquet(statsP).head()
       val index = graft.llm.Bm25Index(
         s.read.parquet(postP), s.read.parquet(lensP),
@@ -2126,7 +2099,7 @@ object LlmQueries {
     "q169_semdedup_append" -> ((s, dir) => {
       val t = Tables(s, dir)
       graft.llm.Similarity.semDedupAppend(semBatch(t),
-        s.read.parquet(ensureSemDedupFixture(s, dir)), cosineCorpus(t),
+        s.read.parquet(semDedupFixture(s, dir)), cosineCorpus(t),
         t.embeddings.filter(col("vec_id") < 16), tau = 0.99,
         centroidIdCol = "vec_id")
     }),
@@ -2168,7 +2141,7 @@ object LlmQueries {
     "q173_dsir_weights" -> ((s, dir) => {
       val t = Tables(s, dir)
       graft.llm.Dsir.scoreDocs(t.documents,
-        s.read.parquet(ensureDsirFixture(s, dir)))
+        s.read.parquet(dsirFixture(s, dir)))
     }),
 
     // DSIR SELECTION — the resampling step: keep the ⌊n/5⌋
@@ -2182,7 +2155,7 @@ object LlmQueries {
       val t = Tables(s, dir)
       graft.llm.Dsir.selectTopFraction(
         graft.llm.Dsir.scoreDocs(t.documents,
-          s.read.parquet(ensureDsirFixture(s, dir))), denom = 5)
+          s.read.parquet(dsirFixture(s, dir))), denom = 5)
     }),
 
     // BIGRAM-LM INGEST SCORING — the KenLM-style perplexity filter:
@@ -2195,7 +2168,7 @@ object LlmQueries {
     // shuffles by contract; one map-side-combined per-doc fold.
     "q175_lm_score" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val (p2, p1, p0) = ensureLmFixture(s, dir)
+      val Seq(p2, p1, p0) = parts(lmFixture(s, dir), "bigram", "w1", "stats")
       graft.llm.NgramLm.scoreDocs(lmBatch(t), s.read.parquet(p2),
         s.read.parquet(p1), s.read.parquet(p0))
     }),
@@ -2240,7 +2213,7 @@ object LlmQueries {
     // re-derives it and fails on drift (the q182 governance pattern).
     "q177_lsh_tuning" -> ((s, dir) =>
       NearDup.bandTuningReport(lshCorpus(Tables(s, dir)), "doc_id", "text",
-        truthPairs = Some(s.read.parquet(ensureLshTruthFixture(s, dir))))),
+        truthPairs = Some(s.read.parquet(lshTruthFixture(s, dir))))),
 
     // SEMDEDUP τ SWEEP — the threshold tuning table for the q167
     // family: ONE pinned-centroid assignment + ONE triangle-blocked
@@ -2283,7 +2256,7 @@ object LlmQueries {
       // verdict. A production funnel reuses its pair artifact the
       // same way instead of re-running LSH per report.
       val survivorIds = kept2.select(col("doc_id"))
-      val pairs = s.read.parquet(ensureLshTruthFixture(s, dir))
+      val pairs = s.read.parquet(lshTruthFixture(s, dir))
         .join(survivorIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"),
           "left_semi")
         .join(survivorIds.withColumnRenamed("doc_id", "id_b"), Seq("id_b"),
@@ -2415,7 +2388,7 @@ object LlmQueries {
     // output at any corpus scale.
     "q184_band_index_growth" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val idx = s.read.parquet(ensureBandIndexFixture(s, dir))
+      val idx = s.read.parquet(bandIndexFixture(s, dir))
       val batch = NearDup.md5BandTable(incrementalBatch(t), "doc_id",
         "text", shingleN = 3, numHashes = 16, bands = 8).localCheckpoint()
       val idxB = idx.select(col("band"), col("bh")).distinct()
@@ -2472,7 +2445,7 @@ object LlmQueries {
     // corpus scale.
     "q186_retrieval_eval" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val (idfP, postP, lensP, statsP) = ensureBm25IndexFixture(s, dir)
+      val Seq(idfP, postP, lensP, statsP) = parts(bm25IndexFixture(s, dir), "idf", "postings", "lens", "stats")
       val st = s.read.parquet(statsP).head()
       val index = graft.llm.Bm25Index(
         s.read.parquet(postP), s.read.parquet(lensP),
@@ -2522,7 +2495,7 @@ object LlmQueries {
     // visibly live. Merged ≡ full refit is NgramLmSpec-pinned.
     "q187_lm_merged" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val (p2, p1, p0) = ensureLmMergedFixture(s, dir)
+      val Seq(p2, p1, p0) = parts(lmMergedFixture(s, dir), "bigram", "w1", "stats")
       graft.llm.NgramLm.scoreDocs(lmBatch(t), s.read.parquet(p2),
         s.read.parquet(p1), s.read.parquet(p0))
     }),
@@ -2584,7 +2557,7 @@ object LlmQueries {
     // cross-engine check covers the artifact content end-to-end.
     "q190_bpe_learned_tokens" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val merges = s.read.parquet(ensureLearnedMergesFixture(s, dir))
+      val merges = s.read.parquet(learnedMergesFixture(s, dir))
         .orderBy("rank").collect()
         .map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
       t.documents.select(col("doc_id"),
@@ -2610,7 +2583,7 @@ object LlmQueries {
     "q191_quality_learned" -> ((s, dir) => {
       val t = Tables(s, dir)
       val w = graft.llm.QualityModel.loadWeights(
-        s.read.parquet(ensureQualityWeightsFixture(s, dir)))
+        s.read.parquet(qualityWeightsFixture(s, dir)))
       graft.llm.QualityModel.scoreDocsLearned(qualityMixed(t),
         s.sparkContext.broadcast(w))
     }),
@@ -2628,7 +2601,7 @@ object LlmQueries {
       val s2 = s
       import s2.implicits._
       val w = graft.llm.QualityModel.loadWeights(
-        s.read.parquet(ensureQualityWeightsFixture(s, dir)))
+        s.read.parquet(qualityWeightsFixture(s, dir)))
       val scored = graft.llm.QualityModel.scoreDocsLearned(qualityMixed(t),
           s.sparkContext.broadcast(w))
         .select(col("n_tokens"), col("margin_nano"))
@@ -2691,7 +2664,7 @@ object LlmQueries {
     // recursion step K — applying ranks 0..K−1 IS the K-budget vocab.
     "q194_merge_budget" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val merges = s.read.parquet(ensureLearnedMergesFixture(s, dir))
+      val merges = s.read.parquet(learnedMergesFixture(s, dir))
         .orderBy("rank").collect()
         .map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
       val wc = graft.llm.BpeTrain.wordCounts(t.documents)
@@ -2755,7 +2728,7 @@ object LlmQueries {
     "q196_quality_merged" -> ((s, dir) => {
       val t = Tables(s, dir)
       val w = graft.llm.QualityModel.loadWeights(
-        s.read.parquet(ensureQualityMergedFixture(s, dir)))
+        s.read.parquet(qualityMergedFixture(s, dir)))
       graft.llm.QualityModel.scoreDocsLearned(
         qualityMixed(t).unionByName(incrementalBatch(t)),
         s.sparkContext.broadcast(w))
@@ -2775,7 +2748,7 @@ object LlmQueries {
       import s.implicits._
       val t = Tables(s, dir)
       val merged = graft.llm.BpeTrain.mergeDicts(
-        s.read.parquet(ensureBpeDictFixture(s, dir)),
+        s.read.parquet(bpeDictFixture(s, dir)),
         graft.llm.BpeTrain.wordCounts(incrementalBatch(t)))
       val learned = graft.llm.BpeTrain.learnMerges(merged, bpeTrainK)
       s.createDataset(learned).toDF()
@@ -2793,7 +2766,7 @@ object LlmQueries {
     // determinism and T→0 convergence to the deterministic cut.
     "q198_dsir_resample" -> ((s, dir) =>
       graft.llm.Dsir.resampleTopFraction(
-        s.read.parquet(ensureGumbelFixture(s, dir)), denom = 5)),
+        s.read.parquet(gumbelFixture(s, dir)), denom = 5)),
 
     // RELEASE FUNNEL UNDER A RESOLUTION POLICY — q179's funnel
     // re-billed under BOTH near-dup cluster policies side by side
@@ -2869,7 +2842,7 @@ object LlmQueries {
     // oracle-checked, not just the counts.
     "q200_resampled_mix" -> ((s, dir) => {
       val t = Tables(s, dir)
-      val noise = s.read.parquet(ensureGumbelFixture(s, dir))
+      val noise = s.read.parquet(gumbelFixture(s, dir))
         .select(col("doc_id"),
           (round(col("gkey") * 1e9, 0).cast("long") -
             round(col("score") * 1e9, 0).cast("long")).as("__noise"))
@@ -2910,53 +2883,33 @@ object LlmQueries {
     })
   )
 
-  // bump when the merged-weights recipe changes
-  private val qualityMergeVersion = 1
-
   /** Build-once MERGED quality-weights fixture for q196: the base
     * COUNT state (clean corpus vs its junk derivative) absorbed with
     * q152's ingest batch (batch clean side + its junk derivative) via
     * the INCREMENTAL operator only, then one ln pass over the merged
     * integers IN SPARK (merged ≡ refit is QualityModelSpec-pinned).
     */
-  private def ensureQualityMergedFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val cntP = s"$base/quality_cnt_${sfName}_v$qualityMergeVersion"
-    val llrP = s"$base/quality_llr_merged_${sfName}_v$qualityMergeVersion"
-    graft.llm.Multimodal.materializeOnce(s, cntP) {
+  private def qualityMergedFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("quality_merged", 1, dir) { out =>
       val docs = Tables(s, dir).documents
       graft.llm.QualityModel.fitCounts(docs,
           docs.select(col("doc_id"), junkText(col("text")).as("text")))
-        .coalesce(1)
-    }
-    graft.llm.Multimodal.materializeOnce(s, llrP) {
+        .coalesce(1).write.parquet(s"$out/cnt")
       val batch = incrementalBatch(Tables(s, dir))
       graft.llm.QualityModel.llrFromCounts(
-          graft.llm.QualityModel.mergeCounts(s.read.parquet(cntP), batch,
+          graft.llm.QualityModel.mergeCounts(s.read.parquet(s"$out/cnt"), batch,
               batch.select(col("doc_id"), junkText(col("text")).as("text")))
             .localCheckpoint()) // metadata-sized; feeds totals + the select
-        .coalesce(1)
-    }
-    llrP
-  }
-
-  // bump when the dictionary recipe changes
-  private val bpeDictVersion = 1
+        .coalesce(1).write.parquet(s"$out/llr")
+    } + "/llr"
 
   /** Build-once persisted word-frequency dictionary of the base
     * corpus — the tokenizer trainer's sufficient statistic q197
     * absorbs the ingest batch into.
     */
-  private def ensureBpeDictFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"bpe_dict_${sfName}_v$bpeDictVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
-      graft.llm.BpeTrain.wordCounts(Tables(s, dir).documents)
-    }
-    path
-  }
+  private def bpeDictFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("bpe_dict", 1, dir)(
+      graft.llm.BpeTrain.wordCounts(Tables(s, dir).documents).write.parquet(_))
 
   /** q195's corpus: documents + truncated twins (the q27 plant) +
     * EXTENDED copies of every 4th doc (same text plus a fixed 5-token
@@ -3054,27 +3007,19 @@ object LlmQueries {
     // texts' margins.)
   }
 
-  // bump when the learned-weights recipe changes
-  private val qualityFitVersion = 2
-
   /** Build-once persisted LEARNED quality-model weights for
     * q191/q192: multinomial-NB log-ratios of the clean corpus
     * (positive class) vs its junk derivative (negative class), fitted
     * once IN SPARK (ln is the cross-engine hazard); both engines read
     * this parquet.
     */
-  private def ensureQualityWeightsFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"quality_llr_${sfName}_v$qualityFitVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def qualityWeightsFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("quality_llr", 2, dir) { out =>
       val docs = Tables(s, dir).documents
       graft.llm.QualityModel.fitWeights(docs,
           docs.select(col("doc_id"), junkText(col("text")).as("text")))
-        .coalesce(1)
+        .coalesce(1).write.parquet(out)
     }
-    path
-  }
 
   /** Learned-merge budget for q189/q190 — small enough that the
     * oracle's K-step unrolled re-derivation stays readable, large
@@ -3082,25 +3027,17 @@ object LlmQueries {
     */
   private val bpeTrainK = 16
 
-  // bump when the training recipe changes
-  private val bpeTrainVersion = 1
-
   /** Build-once persisted LEARNED merge table for q190 — the (rank,
     * a, b, cnt) parquet both engines read (Spark inlines the replace
     * chain; DuckDB replays it recursively).
     */
-  private def ensureLearnedMergesFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"bpe_learned_k${bpeTrainK}_${sfName}_v$bpeTrainVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def learnedMergesFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus(s"bpe_learned_k$bpeTrainK", 1, dir) { out =>
       import s.implicits._
       s.createDataset(graft.llm.BpeTrain.learnMerges(
         graft.llm.BpeTrain.wordCounts(Tables(s, dir).documents), bpeTrainK))
-        .toDF().coalesce(1)
+        .toDF().coalesce(1).write.parquet(out)
     }
-    path
-  }
 
   /** Independent DuckDB re-derivation of the greedy merge learner
     * (the q189/q197 twin): the K-step loop unrolled — per step,
@@ -3178,23 +3115,14 @@ object LlmQueries {
           .otherwise(lit(""))).as("text"))
   }
 
-  // bump when the gram-index recipe changes
-  private val gramIndexVersion = 1
-
   /** Build-once persisted corpus gram index for q162: the distinct
     * 8-gram md5 set of the base documents — the span-dedup state an
     * ingest pipeline maintains. Batch appends read ONLY this parquet.
     */
-  private def ensureGramIndexFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"gram_index_${sfName}_v$gramIndexVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def gramIndexFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("gram_index", 1, dir)(
       graft.llm.ExactSubstr.gramTable(Tables(s, dir).documents, L = 8)
-        .select(col("gram")).distinct()
-    }
-    path
-  }
+        .select(col("gram")).distinct().write.parquet(_))
 
   /** q162's ingest batch, all ids fresh: every 11th doc a VERBATIM
     * copy (every window already in the corpus index — full-doc cut),
@@ -3266,12 +3194,6 @@ object LlmQueries {
             .otherwise(lit(""))).as("text"))
   }
 
-  // bump when the merged-index recipe changes
-  // v2: round 18 moved the fresh-id batch band to ≥ 10⁶ (the ADVICE
-  // fix); the merged postings/lens embed batch doc_ids, so a v1 cache
-  // would carry the old 9x0000 ids
-  private val bm25MergeVersion = 2
-
   /** Build-once MERGED BM25 fixture for q170 — the base persisted
     * index absorbed with q152's ingest batch via the INCREMENTAL
     * operators only (Bm25.mergeIndex / Bm25.mergeIdf): the corpus is
@@ -3279,59 +3201,36 @@ object LlmQueries {
     * merged idf stays a Spark-written fixture BOTH engines read (the
     * q146 ln-hazard device). Returns (idf, postings, lens, stats).
     */
-  private def ensureBm25MergedFixture(
-      s: SparkSession, dir: String): (String, String, String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val (idfP, postP, lensP, statsP) = ensureBm25IndexFixture(s, dir)
-    val mIdf = s"$base/bm25m_idf_${sfName}_v$bm25MergeVersion"
-    val mPost = s"$base/bm25m_postings_${sfName}_v$bm25MergeVersion"
-    val mLens = s"$base/bm25m_lens_${sfName}_v$bm25MergeVersion"
-    val mStats = s"$base/bm25m_stats_${sfName}_v$bm25MergeVersion"
-    lazy val batch = incrementalBatch(Tables(s, dir))
-    lazy val merged = {
-      val st = s.read.parquet(statsP).head()
-      graft.llm.Bm25.mergeIndex(
-        graft.llm.Bm25Index(s.read.parquet(postP), s.read.parquet(lensP),
-          st.getAs[Long]("n_docs"), st.getAs[Long]("tot_len")), batch)
-    }
-    graft.llm.Multimodal.materializeOnce(s, mPost) { merged.postings }
-    graft.llm.Multimodal.materializeOnce(s, mLens) { merged.lens.coalesce(1) }
-    graft.llm.Multimodal.materializeOnce(s, mStats) {
+  private def bm25MergedFixture(s: SparkSession, dir: String): String = {
+    val base = bm25IndexFixture(s, dir)
+    Fixture.corpus("bm25_merged", 2, dir) { out =>
       import s.implicits._
+      val batch = incrementalBatch(Tables(s, dir))
+      val st = s.read.parquet(s"$base/stats").head()
+      val merged = graft.llm.Bm25.mergeIndex(
+        graft.llm.Bm25Index(s.read.parquet(s"$base/postings"), s.read.parquet(s"$base/lens"),
+          st.getAs[Long]("n_docs"), st.getAs[Long]("tot_len")), batch)
+      merged.postings.write.parquet(s"$out/postings")
+      merged.lens.coalesce(1).write.parquet(s"$out/lens")
       Seq((merged.nDocs, merged.totLen)).toDF("n_docs", "tot_len").coalesce(1)
+        .write.parquet(s"$out/stats")
+      graft.llm.Bm25.mergeIdf(s.read.parquet(s"$base/idf"),
+        st.getAs[Long]("n_docs"), batch).coalesce(1).write.parquet(s"$out/idf")
     }
-    graft.llm.Multimodal.materializeOnce(s, mIdf) {
-      val st = s.read.parquet(statsP).head()
-      graft.llm.Bm25.mergeIdf(s.read.parquet(idfP),
-        st.getAs[Long]("n_docs"), batch).coalesce(1)
-    }
-    (mIdf, mPost, mLens, mStats)
   }
-
-  // bump when the semdedup decision recipe changes
-  private val semDedupVersion = 1
 
   /** Build-once persisted SemDeDup decision table for q169: the
     * (vec_id, cluster_id) assignment of the q167 corpus — the state an
     * embedding-ingest pipeline keeps between batches.
     */
-  private def ensureSemDedupFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"semdedup_asg_${sfName}_v$semDedupVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def semDedupFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("semdedup_asg", 1, dir) { out =>
       val t = Tables(s, dir)
       graft.llm.Similarity.semDedupClustered(cosineCorpus(t),
           t.embeddings.filter(col("vec_id") < 16), tau = 0.99,
           centroidIdCol = "vec_id")
-        .select(col("vec_id"), col("cluster_id"))
+        .select(col("vec_id"), col("cluster_id")).write.parquet(out)
     }
-    path
-  }
-
-  // bump when the DSIR model recipe changes
-  private val dsirVersion = 1
 
   /** Build-once persisted DSIR log-likelihood-ratio model for
     * q173/q174: hashed-unigram LMs of TARGET = the English slice vs
@@ -3339,22 +3238,15 @@ object LlmQueries {
     * cross-engine hazard — the q146 idf device); both engines read
     * this parquet.
     */
-  private def ensureDsirFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"dsir_llr_${sfName}_v$dsirVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def dsirFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("dsir_llr", 1, dir) { out =>
       val docs = Tables(s, dir).documents
       graft.llm.Dsir.llrTable(docs.filter(col("lang") === "en"), docs)
-        .coalesce(1)
+        .coalesce(1).write.parquet(out)
     }
-    path
-  }
 
-  // bump when the resampling recipe changes; seed/T are part of the
-  // artifact contract (q198's fixture name does NOT carry them — the
-  // version bump is the invalidation channel)
-  private val dsirResampleVersion = 1
+  // seed/T are part of the q198 artifact contract: the fixture key does
+  // NOT carry them, so changing either needs a version bump
   private val dsirResampleSeed = 42L
   private val dsirResampleT = 1.0
 
@@ -3365,42 +3257,28 @@ object LlmQueries {
     * here; both engines RANK the same parquet (the ln-hazard fixture
     * device, exactly q175's LM-table discipline).
     */
-  private def ensureGumbelFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"dsir_gumbel_${sfName}_v$dsirResampleVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def gumbelFixture(s: SparkSession, dir: String): String = {
+    val dsir = dsirFixture(s, dir)
+    Fixture.corpus("dsir_gumbel", 1, dir)(
       graft.llm.Dsir.gumbelKeys(
-        graft.llm.Dsir.scoreDocs(Tables(s, dir).documents,
-          s.read.parquet(ensureDsirFixture(s, dir))),
+        graft.llm.Dsir.scoreDocs(Tables(s, dir).documents, s.read.parquet(dsir)),
         dsirResampleSeed, dsirResampleT)
-        .coalesce(1)
-    }
-    path
+        .coalesce(1).write.parquet(_))
   }
-
-  // bump when the LM recipe changes
-  private val lmVersion = 1
 
   /** Build-once persisted bigram-LM fixtures for q175 — the three
     * model tables [[graft.llm.NgramLm.fit]] emits over the base
     * corpus: (bigram lp, w1 backoff lp, 1-row (v, lp0) stats). Both
     * engines read these parquets (the ln-hazard fixture device).
-    * Returns (bigramLpPath, w1LpPath, statsPath).
+    * Parts: `bigram`, `w1`, `stats`.
     */
-  private def ensureLmFixture(
-      s: SparkSession, dir: String): (String, String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val p2 = s"$base/lm_bigram_lp_${sfName}_v$lmVersion"
-    val p1 = s"$base/lm_w1_lp_${sfName}_v$lmVersion"
-    val p0 = s"$base/lm_stats_${sfName}_v$lmVersion"
-    lazy val fitted = graft.llm.NgramLm.fit(Tables(s, dir).documents)
-    graft.llm.Multimodal.materializeOnce(s, p2) { fitted._1 }
-    graft.llm.Multimodal.materializeOnce(s, p1) { fitted._2 }
-    graft.llm.Multimodal.materializeOnce(s, p0) { fitted._3.coalesce(1) }
-    (p2, p1, p0)
-  }
+  private def lmFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("lm", 1, dir) { out =>
+      val (bigram, w1, stats) = graft.llm.NgramLm.fit(Tables(s, dir).documents)
+      bigram.write.parquet(s"$out/bigram")
+      w1.write.parquet(s"$out/w1")
+      stats.coalesce(1).write.parquet(s"$out/stats")
+    }
 
   /** One bench-B item's unique 8-token answer string ("qb{id}a" …):
     * disjoint vocabulary from bench A's "bm…"/"evq…" plants, so
@@ -3437,40 +3315,27 @@ object LlmQueries {
           .as("text"))
   }
 
-  // bump when the merged-LM recipe changes
-  private val lmMergeVersion = 1
-
   /** Build-once MERGED bigram-LM fixtures for q187 — the base count
     * state absorbed with q152's ingest batch via the INCREMENTAL
     * operators only (NgramLm.mergeCounts → lpTables): the corpus is
     * never re-read or re-tokenized past the base fixture build, and
     * ln re-evaluates over the merged integers IN SPARK (the q146/q170
-    * device; merged ≡ refit is NgramLmSpec-pinned). Returns the three
-    * merged lp-table paths.
+    * device; merged ≡ refit is NgramLmSpec-pinned). Parts: the base
+    * `c2`/`vocab` counts and the merged `bigram`, `w1`, `stats` tables.
     */
-  private def ensureLmMergedFixture(
-      s: SparkSession, dir: String): (String, String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val cntP = s"$base/lm_c2_${sfName}_v$lmMergeVersion"
-    val vocP = s"$base/lm_vocab_${sfName}_v$lmMergeVersion"
-    val p2 = s"$base/lm2_bigram_lp_${sfName}_v$lmMergeVersion"
-    val p1 = s"$base/lm2_w1_lp_${sfName}_v$lmMergeVersion"
-    val p0 = s"$base/lm2_stats_${sfName}_v$lmMergeVersion"
-    lazy val baseCounts = graft.llm.NgramLm.fitCounts(Tables(s, dir).documents)
-    graft.llm.Multimodal.materializeOnce(s, cntP) { baseCounts._1 }
-    graft.llm.Multimodal.materializeOnce(s, vocP) { baseCounts._2 }
-    lazy val merged = {
+  private def lmMergedFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("lm_merged", 1, dir) { out =>
+      val (c2, vocab) = graft.llm.NgramLm.fitCounts(Tables(s, dir).documents)
+      c2.write.parquet(s"$out/c2")
+      vocab.write.parquet(s"$out/vocab")
       val (mc2, mv) = graft.llm.NgramLm.mergeCounts(
-        s.read.parquet(cntP), s.read.parquet(vocP),
+        s.read.parquet(s"$out/c2"), s.read.parquet(s"$out/vocab"),
         incrementalBatch(Tables(s, dir)))
-      graft.llm.NgramLm.lpTables(mc2.localCheckpoint(), mv)
+      val (bigram, w1, stats) = graft.llm.NgramLm.lpTables(mc2.localCheckpoint(), mv)
+      bigram.write.parquet(s"$out/bigram")
+      w1.write.parquet(s"$out/w1")
+      stats.coalesce(1).write.parquet(s"$out/stats")
     }
-    graft.llm.Multimodal.materializeOnce(s, p2) { merged._1 }
-    graft.llm.Multimodal.materializeOnce(s, p1) { merged._2 }
-    graft.llm.Multimodal.materializeOnce(s, p0) { merged._3.coalesce(1) }
-    (p2, p1, p0)
-  }
 
   /** q175's ingest batch, ids fresh: every 6th doc an unchanged copy
     * (all transitions seen), every (6k+3)rd all-'nv'-prefixed (w1
@@ -3502,27 +3367,15 @@ object LlmQueries {
         substring(col("text"), lit(1),
           greatest(length(col("text")) - 10, lit(1))).as("text")))
 
-  // bump when the band-index recipe changes
-  private val bandIndexVersion = 1
-
   /** Build-once persisted md5-family band index of the base documents
     * for q184 — the lexical near-dup state an ingest pipeline
     * maintains (16 hashes, 8 bands × 2 rows). Batch appends read ONLY
     * this parquet.
     */
-  private def ensureBandIndexFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"band_index_${sfName}_v$bandIndexVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def bandIndexFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("band_index", 1, dir)(
       NearDup.md5BandTable(Tables(s, dir).documents, "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 8)
-    }
-    path
-  }
-
-  // bump when the truth recipe changes
-  private val lshTruthVersion = 1
+        shingleN = 3, numHashes = 16, bands = 8).write.parquet(_))
 
   /** Build-once persisted exact-verified near-dup truth set for q177
     * (the corpus artifact a tuning deployment keeps next to its
@@ -3534,17 +3387,11 @@ object LlmQueries {
     * "verified pair set = ground truth" is a proven property here,
     * not the ~2%-miss LSH bound.
     */
-  private def ensureLshTruthFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"lsh_truth_${sfName}_v$lshTruthVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
+  private def lshTruthFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("lsh_truth", 1, dir)(
       NearDup.nearDupPairs(lshCorpus(Tables(s, dir)), "doc_id", "text",
           threshold = 0.6, shingleN = 3, numHashes = 48, bands = 16)
-        .select(col("id_a"), col("id_b"))
-    }
-    path
-  }
+        .select(col("id_a"), col("id_b")).write.parquet(_))
 
   /** q179's funnel corpus: documents plus a planted drop for EVERY
     * stage — verbatim copies (exact stage), uppercased copies
@@ -3604,49 +3451,22 @@ object LlmQueries {
           concat(lit(" from 10.0."), pmod(col("doc_id"), lit(256)).cast("string"),
             lit(".42"))).otherwise(lit(""))).as("text"))
 
-  // bump when idfTable's formula changes — part of the fixture path key
-  private val bm25IdfVersion = 1
-  // bump when the postings/lens/stats recipe changes (independent of
-  // the idf path, which the ORACLE also reads — keep that stable)
-  private val bm25IdxVersion = 1
-
-  /** Build-once persisted BM25 idf table for q146 (term, df, idf). */
-  private def ensureBm25IdfFixture(s: SparkSession, dir: String): String = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val path = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-      s"bm25_idf_${sfName}_v$bm25IdfVersion"
-    graft.llm.Multimodal.materializeOnce(s, path) {
-      graft.llm.Bm25.idfTable(Tables(s, dir).documents).coalesce(1)
-    }
-    path
-  }
-
-  /** Build-once persisted BM25 retrieval index for q146 — idf (shared
-    * with the oracle) plus postings / lens / 1-row (n_docs, tot_len)
-    * stats, so retrieval performs ZERO driver actions and never
-    * re-tokenizes the corpus (round-15 verdict item 1). Returns
-    * (idfPath, postingsPath, lensPath, statsPath).
+  /** Build-once persisted BM25 retrieval index for q146 — the idf
+    * table (term, df, idf; the oracle reads it too) plus postings /
+    * lens / 1-row (n_docs, tot_len) stats, so retrieval performs ZERO
+    * driver actions and never re-tokenizes the corpus. Parts: `idf`,
+    * `postings`, `lens`, `stats`.
     */
-  private def ensureBm25IndexFixture(
-      s: SparkSession, dir: String): (String, String, String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val idfPath = ensureBm25IdfFixture(s, dir)
-    val postPath = s"$base/bm25_postings_${sfName}_v$bm25IdxVersion"
-    val lensPath = s"$base/bm25_lens_${sfName}_v$bm25IdxVersion"
-    val statsPath = s"$base/bm25_stats_${sfName}_v$bm25IdxVersion"
-    val docs = Tables(s, dir).documents
-    graft.llm.Multimodal.materializeOnce(s, postPath) {
-      graft.llm.Bm25.postings(docs)
+  private def bm25IndexFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("bm25", 1, dir) { out =>
+      val docs = Tables(s, dir).documents
+      graft.llm.Bm25.idfTable(docs).coalesce(1).write.parquet(s"$out/idf")
+      graft.llm.Bm25.postings(docs).write.parquet(s"$out/postings")
+      graft.llm.Bm25.docLens(s.read.parquet(s"$out/postings")).coalesce(1)
+        .write.parquet(s"$out/lens")
+      graft.llm.Bm25.corpusStats(docs, s.read.parquet(s"$out/lens")).coalesce(1)
+        .write.parquet(s"$out/stats")
     }
-    graft.llm.Multimodal.materializeOnce(s, lensPath) {
-      graft.llm.Bm25.docLens(s.read.parquet(postPath)).coalesce(1)
-    }
-    graft.llm.Multimodal.materializeOnce(s, statsPath) {
-      graft.llm.Bm25.corpusStats(docs, s.read.parquet(lensPath)).coalesce(1)
-    }
-    (idfPath, postPath, lensPath, statsPath)
-  }
 
   /** q142/q143's deterministic new-embedding batch: fresh ids, vectors
     * = the corpus vectors REVERSED (different geometry, no float
@@ -3656,84 +3476,53 @@ object LlmQueries {
     t.embeddings.select((col("vec_id") + 100000L).as("vec_id"),
       reverse(col("embedding")).as("embedding"))
 
-  // bump when the index recipe changes — part of the fixture path key
-  private val ivfIndexVersion = 1
-
   /** Build-once persisted IVF index for q142/q143: centroids = the
     * pinned vec_id < 16 base rows; train stats = the full base corpus
     * assigned to them once (decimal residual sums). Subsequent runs —
-    * and every batch append — read ONLY these two parquets.
+    * and every batch append — read ONLY its two parts, `centroids` and
+    * `stats`.
     */
-  private def ensureIvfIndexFixture(s: SparkSession, dir: String): (String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val fixDir = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val centPath = s"$fixDir/ivf_centroids_${sfName}_v$ivfIndexVersion"
-    val statsPath = s"$fixDir/ivf_stats_${sfName}_v$ivfIndexVersion"
-    val t = Tables(s, dir)
-    graft.llm.Multimodal.materializeOnce(s, centPath) {
+  private def ivfIndexFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("ivf", 1, dir) { out =>
+      val t = Tables(s, dir)
       t.embeddings.filter(col("vec_id") < 16)
         .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
-        .coalesce(1)
-    }
-    graft.llm.Multimodal.materializeOnce(s, statsPath) {
+        .coalesce(1).write.parquet(s"$out/centroids")
       graft.llm.IvfIncremental.trainStats(
         graft.llm.IvfIncremental.assignBatch(
-          t.embeddings, s.read.parquet(centPath))).coalesce(1)
+          t.embeddings, s.read.parquet(s"$out/centroids"))).coalesce(1)
+        .write.parquet(s"$out/stats")
     }
-    (centPath, statsPath)
-  }
-
-  // bump when the PQ incremental index recipe changes
-  private val pqIncVersion = 1
 
   /** Build-once persisted incremental-PQ index for q157/q158: pinned
     * per-subspace codebooks (subvectors of the vec_id < 16 base rows —
     * the q142 geometric device applied per subspace) and the
     * per-subspace train-time quantization-error stats from encoding
-    * the FULL base corpus once. Every batch append reads ONLY these
-    * two parquets.
+    * the FULL base corpus once. Every batch append reads ONLY its two
+    * parts, `codebooks` and `stats`.
     */
-  private def ensurePqIncFixture(s: SparkSession, dir: String): (String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val fixDir = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val cbPath = s"$fixDir/pqinc_codebooks_${sfName}_v$pqIncVersion"
-    val statsPath = s"$fixDir/pqinc_stats_${sfName}_v$pqIncVersion"
-    val t = Tables(s, dir)
-    graft.llm.Multimodal.materializeOnce(s, cbPath) {
+  private def pqIncFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("pqinc", 1, dir) { out =>
+      val t = Tables(s, dir)
       graft.llm.PqIncremental.pinnedCodebooks(t.embeddings, dim = 64, m = 8,
-        kCent = 16).coalesce(1)
-    }
-    graft.llm.Multimodal.materializeOnce(s, statsPath) {
+        kCent = 16).coalesce(1).write.parquet(s"$out/codebooks")
       graft.llm.PqIncremental.trainStats(
         graft.llm.PqIncremental.encodeBatch(
-          t.embeddings, s.read.parquet(cbPath), dim = 64, m = 8)).coalesce(1)
+          t.embeddings, s.read.parquet(s"$out/codebooks"), dim = 64, m = 8)).coalesce(1)
+        .write.parquet(s"$out/stats")
     }
-    (cbPath, statsPath)
-  }
-
-  // bump when the datasheet summary recipe changes
-  private val corpusStatsVersion = 1
 
   /** Build-once persisted datasheet stats for q160: the four mergeable
     * tables of [[graft.llm.CorpusStats]] over the base corpus. Every
-    * incremental card run reads ONLY these parquets plus the new
-    * batch.
+    * incremental card run reads ONLY its parts (`scalars`, `hist`,
+    * `langs`, `hashes`) plus the new batch.
     */
-  private def ensureCorpusStatsFixture(
-      s: SparkSession, dir: String): (String, String, String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-    val fixDir = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-    val p = Seq("scalars", "hist", "langs", "hashes")
-      .map(k => s"$fixDir/corpstats_${k}_${sfName}_v$corpusStatsVersion")
-    // lazy: the one-scan summarize runs at most once, and only when a
-    // part is actually missing — otherwise q160 never touches the base
-    lazy val st = graft.llm.CorpusStats.summarize(Tables(s, dir).documents)
-    graft.llm.Multimodal.materializeOnce(s, p(0)) { st.scalars.coalesce(1) }
-    graft.llm.Multimodal.materializeOnce(s, p(1)) { st.hist.coalesce(1) }
-    graft.llm.Multimodal.materializeOnce(s, p(2)) { st.langs.coalesce(1) }
-    graft.llm.Multimodal.materializeOnce(s, p(3)) { st.hashes.coalesce(1) }
-    (p(0), p(1), p(2), p(3))
-  }
+  private def corpusStatsFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("corpstats", 1, dir) { out =>
+      val st = graft.llm.CorpusStats.summarize(Tables(s, dir).documents)
+      Seq("scalars" -> st.scalars, "hist" -> st.hist, "langs" -> st.langs,
+        "hashes" -> st.hashes).foreach { case (k, df) => df.coalesce(1).write.parquet(s"$out/$k") }
+    }
 
   /** q160's ingest batch — q152's shape but datasheet-complete: every
     * 6th doc an unchanged copy (dup hashes — n_unique_texts must NOT
@@ -3759,46 +3548,26 @@ object LlmQueries {
     base.select(col("doc_id"), col("text"), col("lang")).unionByName(twins)
   }
 
-  // kept ids of q121's clean stage per (process, corpus) — see
-  // pcaFixtures for the pattern (fingerprint key, once-per-process
-  // write, serialized builds)
-  private val q121CleanFixtures = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val q121CleanLock = new Object
-  private def ensureQ121CleanFixture(s: SparkSession, dir: String): String =
-    q121CleanLock.synchronized {
-      q121CleanFixtures.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-        val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        // the path encodes every parameter the kept-id set depends on
-        // (dedup params + corpus recipe version), and the write goes
-        // through materializeOnce's write-then-rename + _SUCCESS gate —
-        // a concurrent process sharing java.io.tmpdir can never read a
-        // half-written fixture, and a params change can never silently
-        // reuse an old one (round-13 advice).
-        val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-          s"ts_clean_${sfName}_t60_g3_h48_b16_cv$q121CorpusVersion"
-        graft.llm.Multimodal.materializeOnce(s, fixture) {
-          CorpusDedup.clean(q121Corpus(Tables(s, dir)), "doc_id", "text",
-              threshold = 0.6, shingleN = 3, numHashes = 48, bands = 16)
-            .select(col("doc_id")).coalesce(1)
-        }
-        fixture
-      })
-    }
+  // q121/q145's clean-stage dedup parameters: the clean fixture's name
+  // carries them, so changing them can never reuse kept ids computed
+  // under the old ones
+  private val (q121Threshold, q121Shingle, q121Hashes, q121Bands) = (0.6, 3, 48, 16)
 
-  // bump when q121Corpus's recipe (or CorpusDedup.clean's semantics)
-  // changes — part of the clean-fixture path key
-  private val q121CorpusVersion = 1
+  // kept ids of q121's clean stage — bump the version when q121Corpus's
+  // recipe or CorpusDedup.clean's semantics change
+  private def q121CleanFixture(s: SparkSession, dir: String): String = {
+    val params = f"t${q121Threshold * 100}%.0f_g${q121Shingle}_h${q121Hashes}_b$q121Bands"
+    Fixture.corpus(s"ts_clean_$params", 1, dir)(
+      CorpusDedup.clean(q121Corpus(Tables(s, dir)), "doc_id", "text", threshold = q121Threshold,
+          shingleN = q121Shingle, numHashes = q121Hashes, bands = q121Bands)
+        .select(col("doc_id")).coalesce(1).write.parquet(_))
+  }
 
-  // Fitted PCA components per (process, corpus) — the once-per-corpus
-  // model artifact (q42-bucket / q48-index amortization pattern): fit
-  // = exact gram + driver eigen, deterministic for a fixed corpus, so
-  // an existing fixture is always valid to reuse within a process;
-  // the fingerprint key forces a refit when the corpus regenerates.
-  // Builds serialize on the lock (the RelationalQueries race fix).
-  private val pcaFixtures = scala.collection.concurrent.TrieMap.empty[String, String]
-  private val pcaFitLock = new Object
-  private def ensurePcaFixture(s: SparkSession, dir: String): String =
-    pcaFitLock.synchronized { pcaFixtures.getOrElseUpdate(Tables.fixtureKey(s, dir), {
+  // Fitted PCA components — the once-per-corpus model artifact (q42
+  // bucket / q48 index amortization pattern): fit = exact gram + driver
+  // eigen, deterministic for a fixed corpus.
+  private def pcaFixture(s: SparkSession, dir: String): String =
+    Fixture.corpus("pca", 1, dir) { out =>
       val emb = Tables(s, dir).embeddings
       val d = Tables.EmbeddingDim
       val k = 4
@@ -3808,36 +3577,27 @@ object LlmQueries {
       val comps = (0 until k).flatMap { c =>
         (0 until d).map(i => (c.toLong, i, p.components(c)(i), means(i)))
       }
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/pca_$sfName"
-      s.createDataFrame(comps).toDF("pc", "dim", "w", "mean")
-        .coalesce(1).write.mode("overwrite").parquet(fixture)
-      fixture
-    }) }
+      s.createDataFrame(comps).toDF("pc", "dim", "w", "mean").coalesce(1).write.parquet(out)
+    }
 
-  // ---- oracle fixture-path parameterization (round-14) ----
-  // Six oracles read fixtures the QUERIES materialize per sf
-  // (q32/q83/q97/q119/q126/q140). oracleSql is a def, so their paths
-  // resolve at DUMP time through this sf name: graft.Verify sets it
-  // from its sfDir argument before writing oracle_sql.json, making
-  // tools/selfcheck.py green at every sf (round-13 verdict: the gate
-  // was blind below sf0.01). The default matches the driver's sf0.01
-  // verification run.
-  @volatile var oracleSfName: String = "sf0.01"
-  private def oracleSf: Double =
-    raw"sf([0-9.]+)".r.findFirstMatchIn(oracleSfName)
+  // Size of the generated media and JSONL inputs (q32/q83/q119/q126/
+  // q140), proportional to the scale factor in the corpus dir name
+  // (…/sf0.01 → 200 rows) so the bench number scales like every other
+  // query. The inputs themselves are keyed by this size, not the dir.
+  private def mediaFixtureN(dir: String): Long = {
+    val sf = raw"sf([0-9.]+)".r.findFirstMatchIn(dir)
       .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
       .getOrElse(0.01)
-  // the multimodal fixture-size rule (same formula as the query side)
-  private def oracleFixN: Long = math.max(60L, (20000 * oracleSf).toLong)
+    math.max(60L, (20000 * sf).toLong)
+  }
 
-  // scale factor parsed from the test-data dir name (…/sf0.01 → 0.01);
-  // sizes the generated multimodal fixture proportionally to the driver
-  // tables so the bench number scales like every other query.
-  private def sfOf(dir: String): Double =
-    raw"sf([0-9.]+)".r.findFirstMatchIn(dir)
-      .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
-      .getOrElse(0.01)
+  private def parts(fixture: String, names: String*): Seq[String] = names.map(n => s"$fixture/$n")
+
+  // Oracle SQL reading a fixture reads the directory the query last
+  // resolved (`Fixture.path`); the queries run before oracle_sql.json is
+  // written, so the DuckDB twin sees exactly the query's input.
+  private def fixtureFiles(name: String, part: String = ""): String =
+    (Fixture.path(name) + (if (part.isEmpty) "" else s"/$part")) + "/*.parquet"
 
   // documents + truncated twins — the near-dup corpus the q27/q36/q40
   // oracles share.
@@ -4026,14 +3786,12 @@ object LlmQueries {
     // i-9 iff i % 10 == 9, all other payloads are distinct seeded
     // streams) fully determines the dedup group structure from id
     // alone, so the oracle reads the SAME parquet fixture q32 decoded
-    // (written by the q32 run before the oracle executes; Verify sets
-    // oracleSfName so the path tracks the sf being verified) and regroups
+    // (written by the q32 run before the oracle executes) and regroups
     // by the recipe — no decoder needed. Feature-collision risk is
     // structurally nil: distinct payloads hash to distinct 64-bit
     // folds on this deterministic fixture (asserted in MultimodalSpec).
     "q32_multimodal" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/multimodal_$oracleSfName" +
-        Multimodal.fixtureKey(oracleFixN, 42L) + "/*.parquet"
+      val fixture = fixtureFiles("multimodal")
       s"""WITH g AS (
            SELECT id, modality,
                   CASE WHEN id % 10 = 9 THEN id - 9 ELSE id END AS grp
@@ -4659,8 +4417,7 @@ object LlmQueries {
     // is exact, ×10⁶ + half-up round are IEEE-identical, and the vote
     // 64·qᵢ > Σq is pure BIGINT arithmetic.
     "q119_phash_image_neardup" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/images_decoded_${oracleSfName}_n$oracleFixN" +
-        s"_v${Multimodal.fixtureGenVersion}/*.parquet"
+      val fixture = fixtureFiles("images_decoded")
       s"""WITH q AS (
             SELECT id, list_transform(feature,
               x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qarr
@@ -4680,8 +4437,7 @@ object LlmQueries {
     // Audio pHash ground truth — identical program to q119's over the
     // audio envelope raster parquet.
     "q126_phash_audio_neardup" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/audio_decoded_${oracleSfName}_n$oracleFixN" +
-        s"_v${Multimodal.fixtureGenVersion}/*.parquet"
+      val fixture = fixtureFiles("audio_decoded")
       s"""WITH q AS (
             SELECT id, list_transform(feature,
               x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qarr
@@ -4702,8 +4458,7 @@ object LlmQueries {
     // frame-mean raster parquet the q140 run persisted (every frame
     // went through the real javax.imageio codec to build it).
     "q140_phash_video_neardup" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/video_decoded_${oracleSfName}_n$oracleFixN" +
-        s"_v${Multimodal.fixtureGenVersion}/*.parquet"
+      val fixture = fixtureFiles("video_decoded")
       s"""WITH q AS (
             SELECT id, list_transform(feature,
               x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qarr
@@ -4721,11 +4476,10 @@ object LlmQueries {
     },
 
     // Reads the SAME JSONL files q83 ingested (written by the q83 run
-    // before the oracle executes; Verify sets oracleSfName so the path
-    // tracks the sf being verified) — the cross-engine check covers
+    // before the oracle executes) — the cross-engine check covers
     // the PARSE, not just the aggregate.
     "q83_jsonl_ingest" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/jsonl_$oracleSfName/*.json"
+      val fixture = Fixture.path("jsonl") + "/*.json"
       s"""SELECT lang, COUNT(*) AS n_docs,
                  CAST(SUM(id) AS BIGINT) AS sum_id,
                  CAST(SUM(length(text)) AS BIGINT) AS n_chars,
@@ -4911,12 +4665,10 @@ object LlmQueries {
          SELECT gram, COUNT(*) AS n FROM grams
          GROUP BY gram HAVING COUNT(*) >= 5""",
     // PCA projection twin: reads the SAME fitted components the q97
-    // run wrote (q83's shared-fixture pattern — Verify sets
-    // oracleSfName so the path tracks the sf being verified),
-    // recomputes the mean-centered dot products with the same decimal
+    // run wrote (q83's shared-fixture pattern), recomputes the mean-centered dot products with the same decimal
     // term sums.
     "q97_pca_project" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/pca_$oracleSfName/*.parquet"
+      val fixture = fixtureFiles("pca")
       s"""WITH flat AS (
            SELECT vec_id, e.d AS dim, e.x AS x FROM (
              SELECT vec_id, UNNEST(list_transform(embedding,
@@ -5242,8 +4994,7 @@ object LlmQueries {
     // identical operands; per-term round-9 contributions sum in
     // DECIMAL (order-independent).
     "q146_bm25" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"bm25_idf_$oracleSfName" + s"_v$bm25IdfVersion/*.parquet"
+      val fixture = fixtureFiles("bm25", "idf")
       s"""WITH tok AS (SELECT doc_id, unnest($sqlToks) AS term FROM documents),
           tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
           lens AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS len
@@ -5605,8 +5356,7 @@ object LlmQueries {
     // 1/(60+rank) sum. Heavy CTEs MATERIALIZED (plain CTEs inline per
     // reference).
     "q159_hybrid_rrf" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"bm25_idf_$oracleSfName" + s"_v$bm25IdfVersion/*.parquet"
+      val fixture = fixtureFiles("bm25", "idf")
       s"""WITH tok AS (SELECT doc_id, unnest($sqlToks) AS term FROM documents),
           tf AS MATERIALIZED (SELECT doc_id, term, COUNT(*) AS tf
                               FROM tok GROUP BY 1, 2),
@@ -6068,8 +5818,7 @@ object LlmQueries {
     // text), idf read from the MERGED Spark-written fixture — exactly
     // the rebuild the merge operators claim to equal.
     "q170_bm25_merged" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"bm25m_idf_$oracleSfName" + s"_v$bm25MergeVersion/*.parquet"
+      val fixture = fixtureFiles("bm25_merged", "idf")
       s"""WITH allc AS MATERIALIZED (
             SELECT doc_id, text FROM documents
             UNION ALL
@@ -6289,8 +6038,7 @@ object LlmQueries {
     // (the scored docs ARE the raw corpus), so the inner join loses
     // nothing.
     "q173_dsir_weights" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"dsir_llr_$oracleSfName" + s"_v$dsirVersion/*.parquet"
+      val fixture = fixtureFiles("dsir_llr")
       s"""WITH tk AS (SELECT doc_id, $sqlToks AS t FROM documents),
           tok AS (SELECT doc_id, unnest(t) AS tok FROM tk),
           m AS (SELECT bucket, CAST(ROUND(llr * 1e9, 0) AS BIGINT) AS nano
@@ -6310,8 +6058,7 @@ object LlmQueries {
     // DSIR-selection twin: the q173 sums ranked by (s desc, id), cut
     // at ⌊n/5⌋ by FLOOR of one double division.
     "q174_dsir_select" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"dsir_llr_$oracleSfName" + s"_v$dsirVersion/*.parquet"
+      val fixture = fixtureFiles("dsir_llr")
       s"""WITH tk AS (SELECT doc_id, $sqlToks AS t FROM documents),
           tok AS (SELECT doc_id, unnest(t) AS tok FROM tk),
           m AS (SELECT bucket, CAST(ROUND(llr * 1e9, 0) AS BIGINT) AS nano
@@ -6340,10 +6087,7 @@ object LlmQueries {
     // Spark-fitted log-prob tables, the same three-way backoff
     // coalesce, exact nano sums, one division chain.
     "q175_lm_score" -> {
-      val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-      val f2 = s"$base/lm_bigram_lp_$oracleSfName" + s"_v$lmVersion/*.parquet"
-      val f1 = s"$base/lm_w1_lp_$oracleSfName" + s"_v$lmVersion/*.parquet"
-      val f0 = s"$base/lm_stats_$oracleSfName" + s"_v$lmVersion/*.parquet"
+      val Seq(f2, f1, f0) = Seq("bigram", "w1", "stats").map(fixtureFiles("lm", _))
       s"""WITH batch AS (
             SELECT doc_id + 1000000 AS doc_id, text FROM documents
             WHERE doc_id % 6 = 0
@@ -6727,8 +6471,7 @@ object LlmQueries {
     // IVF program, each over the twin queries, graded by the identical
     // metrics fold (round9-reciprocal nano sums).
     "q186_retrieval_eval" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"bm25_idf_$oracleSfName" + s"_v$bm25IdfVersion/*.parquet"
+      val fixture = fixtureFiles("bm25", "idf")
       def metricsSql(src: String, name: String) =
         s"""SELECT '$name' AS retriever, CAST(10 AS BIGINT) AS n_queries,
               CAST(COALESCE(SUM(CASE WHEN rank <= 1 THEN 1 END), 0) AS BIGINT)
@@ -6821,10 +6564,7 @@ object LlmQueries {
     // only — the rebuild equivalence is spec-pinned Spark-side, the
     // q170 discipline).
     "q187_lm_merged" -> {
-      val base = s"${sys.props("java.io.tmpdir")}/graft-fixtures"
-      val f2 = s"$base/lm2_bigram_lp_$oracleSfName" + s"_v$lmMergeVersion/*.parquet"
-      val f1 = s"$base/lm2_w1_lp_$oracleSfName" + s"_v$lmMergeVersion/*.parquet"
-      val f0 = s"$base/lm2_stats_$oracleSfName" + s"_v$lmMergeVersion/*.parquet"
+      val Seq(f2, f1, f0) = Seq("bigram", "w1", "stats").map(fixtureFiles("lm_merged", _))
       s"""WITH batch AS (
             SELECT doc_id + 1000000 AS doc_id, text FROM documents
             WHERE doc_id % 6 = 0
@@ -6936,8 +6676,7 @@ object LlmQueries {
     // sqlTableCtes pattern; the 16-row table needs no candidate
     // pruning), then bill each document's word multiset through it.
     "q190_bpe_learned_tokens" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"bpe_learned_k${bpeTrainK}_${oracleSfName}_v$bpeTrainVersion/*.parquet"
+      val fixture = fixtureFiles(s"bpe_learned_k$bpeTrainK")
       s"""WITH RECURSIVE
           st AS (SELECT CAST(row_number() OVER (ORDER BY rank) AS BIGINT) AS step,
                         a, b
@@ -6979,8 +6718,7 @@ object LlmQueries {
     // vocabularies, full-outer fit), so the inner join loses nothing;
     // empty docs come back via the left join.
     "q191_quality_learned" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"quality_llr_${oracleSfName}_v$qualityFitVersion/*.parquet"
+      val fixture = fixtureFiles("quality_llr")
       s"""WITH $sqlQualityMixed,
           tk AS (SELECT doc_id, $sqlToks AS t FROM mixed),
           tok AS (SELECT doc_id, unnest(t) AS tok FROM tk),
@@ -7007,8 +6745,7 @@ object LlmQueries {
     // the same integer thresholds — score ≥ θ/10⁹ ⇔ margin ≥ θ·n,
     // all BIGINT.
     "q192_learned_calibration" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"quality_llr_${oracleSfName}_v$qualityFitVersion/*.parquet"
+      val fixture = fixtureFiles("quality_llr")
       val thetaVals = learnedCalThetas.map(t => s"($t)").mkString(", ")
       s"""WITH $sqlQualityMixed,
           tk AS (SELECT doc_id, $sqlToks AS t FROM mixed),
@@ -7096,8 +6833,7 @@ object LlmQueries {
     // encoding at recursion step K (ranks 0..K−1 applied = the
     // K-budget vocabulary); dictionary-weighted token totals.
     "q194_merge_budget" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"bpe_learned_k${bpeTrainK}_${oracleSfName}_v$bpeTrainVersion/*.parquet"
+      val fixture = fixtureFiles(s"bpe_learned_k$bpeTrainK")
       val budgetVals = mergeBudgets.map(k => s"($k)").mkString(", ")
       s"""WITH RECURSIVE
           st AS (SELECT CAST(row_number() OVER (ORDER BY rank) AS BIGINT) AS step,
@@ -7184,8 +6920,7 @@ object LlmQueries {
     // buckets are in the merged model's clean side, so those rows
     // score positive where the base model gave zero.
     "q196_quality_merged" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"quality_llr_merged_${oracleSfName}_v$qualityMergeVersion/*.parquet"
+      val fixture = fixtureFiles("quality_merged", "llr")
       s"""WITH $sqlQualityMixed,
           batch AS (
             SELECT doc_id + 1000000 AS doc_id, text
@@ -7238,8 +6973,7 @@ object LlmQueries {
     // double division; n = the key table's own row count (one row per
     // corpus doc by construction).
     "q198_dsir_resample" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"dsir_gumbel_$oracleSfName" + s"_v$dsirResampleVersion/*.parquet"
+      val fixture = fixtureFiles("dsir_gumbel")
       s"""WITH k AS (SELECT doc_id, gkey,
                        CAST(ROUND(gkey * 1e9, 0) AS BIGINT) AS g
                      FROM read_parquet('$fixture')),
@@ -7331,8 +7065,7 @@ object LlmQueries {
     // nano subtraction, per-source ROW_NUMBER fill, and the
     // selected-id checksum.
     "q200_resampled_mix" -> {
-      val fixture = s"${sys.props("java.io.tmpdir")}/graft-fixtures/" +
-        s"dsir_gumbel_$oracleSfName" + s"_v$dsirResampleVersion/*.parquet"
+      val fixture = fixtureFiles("dsir_gumbel")
       s"""WITH nz AS (SELECT doc_id,
                         CAST(ROUND(gkey * 1e9, 0) AS BIGINT)
                           - CAST(ROUND(score * 1e9, 0) AS BIGINT) AS noise

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 import graft.Tables
+import graft.util.Fixture
 
 /** General relational operator surface (SURVEY.md §2.1–§2.6 + built-in
   * Spark coverage the reference gets "for free"): scans, projections,
@@ -63,96 +64,62 @@ object RelationalQueries {
           + when(col("t_purchase").isNotNull, 1).otherwise(0)).as("stage"))
   }
 
-  /** Ensure the bucketed fact-table layout for `dir`'s scale factor
-    * exists in this session (q42/q43 share it). Deterministic content →
-    * a table created earlier this session is always valid to reuse
-    * (bench warm-up materializes them once); `writeBucketed` itself is
-    * idempotent across processes, so a stale on-disk location from a
-    * previous JVM can never fail the build.
+  /** The bucketed fact-table layout q42/q43 share: both tables persist
+    * bucketed and sorted on the join key, and each session registers
+    * them as catalog tables over the fixture's files.
     */
-  private def ensureBucketedTables(s: SparkSession, dir: String): (String, String) = {
-    val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-      .replace(".", "_")
+  private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
     val t = Tables(s, dir)
-    // Corpus fingerprint in the TABLE NAME: a mid-session corpus regen
-    // changes the name, so tableExists misses and the layout rebuilds
-    // from the new corpus instead of joining stale buckets.
-    val fp = Tables.corpusFingerprintHex(dir)
-    val liTbl = s"graft_bkt_lineitem_${sfName}_$fp"
-    val ordTbl = s"graft_bkt_orders_${sfName}_$fp"
-    if (!s.catalog.tableExists(liTbl))
-      graft.operators.Layout.writeBucketed(
-        t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount"),
-        liTbl, buckets = 8, keys = Seq("l_orderkey"))
-    if (!s.catalog.tableExists(ordTbl))
-      graft.operators.Layout.writeBucketed(
-        t.orders.select("o_orderkey", "o_orderpriority"),
-        ordTbl, buckets = 8, keys = Seq("o_orderkey"))
-    (liTbl, ordTbl)
+    val specs = Seq(
+      ("lineitem", "l_orderkey", t.lineitem.select("l_orderkey", "l_extendedprice", "l_discount")),
+      ("orders", "o_orderkey", t.orders.select("o_orderkey", "o_orderpriority")))
+    val p = Fixture.corpus("bucketed", 1, dir) { out =>
+      specs.foreach { case (name, key, df) =>
+        val tmp = s"graft_bkt_build_${java.util.UUID.randomUUID.toString.replace("-", "")}"
+        graft.operators.Layout.writeBucketed(df, tmp, 8, Seq(key), Some(s"$out/$name"))
+        s.sql(s"DROP TABLE $tmp") // external: the files stay
+      }
+    }
+    val Seq(li, ord) = Fixture.open(s, p)(p => specs.map { case (name, key, df) =>
+      val tbl = f"graft_bkt_${name}_${p.hashCode & 0xffffffffL}%08x"
+      s.sql(s"CREATE TABLE IF NOT EXISTS $tbl (${df.schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS LOCATION '$p/$name'")
+      tbl
+    })
+    (li, ord)
   }
 
-  /** One z-ordered copy of `events` per (process, sf): like the
-    * bucketed tables, the layout write is the once-per-deployment cost
-    * the query amortizes (bench warm-up materializes it; measured runs
-    * read it).
+  /** A z-ordered copy of `events`: like the bucketed tables, the layout
+    * write is the once-per-deployment cost the query amortizes.
     */
-  // TrieMap.getOrElseUpdate may evaluate the builder TWICE under
-  // concurrent first use (e.g. two suites touching the same fixture in
-  // parallel), racing two overwrite parquet writes to one path — all
-  // layout-fixture builds serialize on this lock instead (they run
-  // once per process; contention is nil). ADVICE round-10.
-  private val fixtureBuildLock = new Object
+  private def zOrderedEvents(s: SparkSession, dir: String): String =
+    Fixture.corpus("z_events", 1, dir)(
+      graft.operators.ZOrder.write(Tables(s, dir).events, Seq("user_id", "value"), _, numFiles = 8))
 
-  private val zEventsPaths = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ensureZOrderedEvents(s: SparkSession, dir: String): String =
-    fixtureBuildLock.synchronized { zEventsPaths.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        .replace(".", "_")
-      val path = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        s"/graft_z_events_${sfName}_${Tables.corpusFingerprintHex(dir)}"
-      graft.operators.ZOrder.write(Tables(s, dir).events,
-        Seq("user_id", "value"), path, numFiles = 8)
-      path
-    }) }
-
-  /** One time-clustered events copy + its file manifest per
-    * (process, sf) — the append-only log layout (range-partitioned and
-    * sorted by ts) every event table at scale already has, plus the
-    * per-file min/max manifest `operators.Manifest` maintains over it.
-    * Built once (bench warm-up), reused by every q57 run; the manifest
-    * is localCheckpointed so pruning never rescans the data.
+  /** A time-clustered events copy plus its file manifest — the
+    * append-only log layout (range-partitioned and sorted by ts) every
+    * event table at scale already has, plus the per-file min/max
+    * manifest `operators.Manifest` maintains over it. The manifest is
+    * localCheckpointed once per session so pruning never rescans the
+    * data.
     */
-  private val manifestEvents =
-    scala.collection.concurrent.TrieMap.empty[String, (String, DataFrame)]
-  private def ensureManifestEvents(s: SparkSession, dir: String): (String, DataFrame) =
-    fixtureBuildLock.synchronized { manifestEvents.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        .replace(".", "_")
-      val path = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        s"/graft_m_events_${sfName}_${Tables.corpusFingerprintHex(dir)}"
-      Tables(s, dir).events
-        .repartitionByRange(8, col("ts"))
-        .sortWithinPartitions("ts")
-        .write.mode("overwrite").parquet(path)
-      (path, graft.operators.Manifest.collectStats(s, path, Seq("ts")).localCheckpoint())
-    }) }
+  private def manifestEvents(s: SparkSession, dir: String): (String, DataFrame) = {
+    val p = Fixture.corpus("m_events", 1, dir)(
+      Tables(s, dir).events.repartitionByRange(8, col("ts")).sortWithinPartitions("ts")
+        .write.parquet(_))
+    (p, Fixture.open(s, p)(graft.operators.Manifest.collectStats(s, _, Seq("ts")).localCheckpoint()))
+  }
 
-  /** One Hive-style DAY-PARTITIONED copy of `events` per (process,
-    * sf) — `.../event_date=YYYY-MM-DD/part-*.parquet`, THE canonical
+  /** A Hive-style DAY-PARTITIONED copy of `events` —
+    * `.../event_date=YYYY-MM-DD/part-*.parquet`, THE canonical
     * time-series layout at 100 TB (every warehouse's event log is
-    * date-partitioned). Built once like the z-order/manifest fixtures;
-    * q89 queries it with a partition predicate so pruning happens at
-    * PLANNING time (PartitionFilters on the scan — files from other
-    * days are never listed into tasks, a stronger guarantee than
-    * row-group min/max skipping).
+    * date-partitioned). q89 queries it with a partition predicate so
+    * pruning happens at PLANNING time (PartitionFilters on the scan —
+    * files from other days are never listed into tasks, a stronger
+    * guarantee than row-group min/max skipping).
     */
-  private val partitionedEvents = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ensurePartitionedEvents(s: SparkSession, dir: String): String =
-    fixtureBuildLock.synchronized { partitionedEvents.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        .replace(".", "_")
-      val path = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        s"/graft_p_events_${sfName}_${Tables.corpusFingerprintHex(dir)}"
+  private def partitionedEvents(s: SparkSession, dir: String): String =
+    Fixture.corpus("p_events", 1, dir)(
       Tables(s, dir).events
         .withColumn("event_date", to_date(col("ts")))
         // one file per day partition: the write shuffles on the
@@ -160,55 +127,44 @@ object RelationalQueries {
         // this, every task writes a sliver of every day — the
         // small-file explosion `Layout.compact` exists to undo)
         .repartition(col("event_date"))
-        .write.mode("overwrite").partitionBy("event_date").parquet(path)
-      path
-    }) }
+        .write.partitionBy("event_date").parquet(_))
 
-  /** One ORC copy of `events` per (process, sf) — the format-breadth
-    * fixture: warehouses routinely hold ORC alongside parquet, and the
-    * engine must read it with the same pushdown/pruning guarantees.
-    * q106 queries it with a selective predicate; the scan must show
-    * the filter pushed into the ORC reader and a pruned ReadSchema
-    * (PlanAudit), and the DuckDB twin reads the PARQUET original — a
-    * match proves the cross-format round-trip bit-exactly.
+  /** An ORC copy of `events` — the format-breadth fixture: warehouses
+    * routinely hold ORC alongside parquet, and the engine must read it
+    * with the same pushdown/pruning guarantees. q106 queries it with a
+    * selective predicate; the scan must show the filter pushed into the
+    * ORC reader and a pruned ReadSchema (PlanAudit), and the DuckDB twin
+    * reads the PARQUET original — a match proves the cross-format
+    * round-trip bit-exactly.
     */
-  private val orcEvents = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ensureOrcEvents(s: SparkSession, dir: String): String =
-    fixtureBuildLock.synchronized { orcEvents.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        .replace(".", "_")
-      val path = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        s"/graft_orc_events_${sfName}_${Tables.corpusFingerprintHex(dir)}"
-      Tables(s, dir).events.write.mode("overwrite").orc(path)
-      path
-    }) }
+  private def orcEvents(s: SparkSession, dir: String): String =
+    Fixture.corpus("orc_events", 1, dir)(Tables(s, dir).events.write.orc(_))
 
-  /** One persisted per-day quantile-sketch table over `events.value`
-    * per (process, sf) — q59's deployment shape for percentiles: the
-    * per-day pre-aggregate a latency dashboard maintains (new days
-    * append without touching history), merged at query time. The
-    * (lo, hi) bin range is the data's exact min/max — exact aggregates,
-    * so the sketch (and q64's answer) is fully deterministic and
-    * oracle-checkable, unlike merge-order-sensitive KLL/GK sketches.
+  /** A persisted per-day quantile-sketch table over `events.value` —
+    * q64's deployment shape for percentiles: the per-day pre-aggregate a
+    * latency dashboard maintains (new days append without touching
+    * history), merged at query time. The (lo, hi) bin range is the
+    * data's exact min/max, persisted next to the sketch — exact
+    * aggregates, so the sketch (and q64's answer) is fully deterministic
+    * and oracle-checkable, unlike merge-order-sensitive KLL/GK sketches.
     */
-  private val dailyValueSketch =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Double, Double)]
   private val SketchBins = 256
-  private def ensureDailyValueSketch(s: SparkSession, dir: String): (String, Double, Double) =
-    fixtureBuildLock.synchronized { dailyValueSketch.getOrElseUpdate(Tables.fixtureKey(s, dir), {
-      val sfName = raw"sf[0-9.]+".r.findFirstIn(dir).getOrElse("default")
-        .replace(".", "_")
-      val path = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        s"/graft_qsketch_events_${sfName}_${Tables.corpusFingerprintHex(dir)}"
-      val t = Tables(s, dir)
-      val r = t.events.agg(min(col("value")).cast("double"),
-        max(col("value")).cast("double")).head()
+  private def dailyValueSketch(s: SparkSession, dir: String): (String, Double, Double) = {
+    val p = Fixture.corpus("qsketch_events", 1, dir) { out =>
+      val ev = Tables(s, dir).events
+      val r = ev.agg(min(col("value")).cast("double"), max(col("value")).cast("double")).head()
       val (lo, hi) = (r.getDouble(0), r.getDouble(1))
-      graft.operators.QuantileSketch.histogram(t.events, "value",
+      graft.operators.QuantileSketch.histogram(ev, "value",
           Seq("event_type"), to_date(col("ts")), "day", lo, hi, SketchBins)
-        .write.mode("overwrite").parquet(path)
-      (path, lo, hi)
-    }) }
+        .write.parquet(s"$out/sketch")
+      s.createDataFrame(Seq((lo, hi))).toDF("lo", "hi").write.parquet(s"$out/range")
+    }
+    val (lo, hi) = Fixture.open(s, p) { p =>
+      val r = s.read.parquet(s"$p/range").head()
+      (r.getDouble(0), r.getDouble(1))
+    }
+    (s"$p/sketch", lo, hi)
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Bucketed CO-LOCATED join — the layout lever that decides whether
@@ -219,7 +175,7 @@ object RelationalQueries {
     // LayoutSpec asserts the no-Exchange property directly). The only
     // shuffle left is the final small groupBy.
     "q42_bucketed_join" -> ((s, dir) => {
-      val (liTbl, ordTbl) = ensureBucketedTables(s, dir)
+      val (liTbl, ordTbl) = bucketedTables(s, dir)
       s.table(liTbl).hint("merge")
         .join(s.table(ordTbl).hint("merge"),
           col("l_orderkey") === col("o_orderkey"))
@@ -238,7 +194,7 @@ object RelationalQueries {
     // continuously-maintained layout amortizing across every downstream
     // join AND aggregation on the same key.
     "q43_bucketed_agg" -> ((s, dir) => {
-      val (liTbl, _) = ensureBucketedTables(s, dir)
+      val (liTbl, _) = bucketedTables(s, dir)
       s.table(liTbl)
         .groupBy(col("l_orderkey"))
         .agg(
@@ -688,7 +644,7 @@ object RelationalQueries {
     // measures the per-file spans); a single-column sort would only
     // serve one of them.
     "q54_zorder_scan" -> ((s, dir) => {
-      val path = ensureZOrderedEvents(s, dir)
+      val path = zOrderedEvents(s, dir)
       s.read.parquet(path)
         .filter(col("user_id").between(3, 9) &&
           col("value").between(10.0, 60.0))
@@ -755,11 +711,11 @@ object RelationalQueries {
     // copy (operators.Manifest): the driver drops files whose [min_ts,
     // max_ts] misses the predicate BEFORE any task launches — Delta/
     // Iceberg-style data skipping over plain parquet. The layout+
-    // manifest are the once-per-deployment cost (ensureManifestEvents);
+    // manifest are the once-per-deployment cost (manifestEvents);
     // the residual filter keeps file-granular pruning semantically
     // invisible, so the oracle is the plain filtered aggregate.
     "q57_manifest_scan" -> ((s, dir) => {
-      val (path, m) = ensureManifestEvents(s, dir)
+      val (path, m) = manifestEvents(s, dir)
       val lo = lit("2024-01-10 00:00:00").cast("timestamp")
       val hi = lit("2024-01-12 23:59:59").cast("timestamp")
       graft.operators.Manifest.prunedRead(s, path, m, "ts", lo, hi)
@@ -785,7 +741,7 @@ object RelationalQueries {
     // merge-equals-direct and storage-round-trip properties by
     // QuantileSketchSpec.
     "q64_daily_quantile_sketch" -> ((s, dir) => {
-      val (path, lo, hi) = ensureDailyValueSketch(s, dir)
+      val (path, lo, hi) = dailyValueSketch(s, dir)
       graft.operators.QuantileSketch.percentiles(s.read.parquet(path),
         Seq("event_type"), Seq("p50_value" -> 0.5, "p90_value" -> 0.9),
         lo, hi, SketchBins)
@@ -1128,7 +1084,7 @@ object RelationalQueries {
     }),
 
     // PARTITION-PRUNED scan over the Hive day-partitioned events copy
-    // (ensurePartitionedEvents): the first three days of the log,
+    // (partitionedEvents): the first three days of the log,
     // selected by a predicate on the PARTITION COLUMN — pruning
     // happens at planning (PartitionFilters on the scan), so files
     // from the other days are never even listed into tasks. This is
@@ -1139,7 +1095,7 @@ object RelationalQueries {
     // metadata, no data read), so the query is deterministic per
     // corpus.
     "q89_partition_prune" -> ((s, dir) => {
-      val path = ensurePartitionedEvents(s, dir)
+      val path = partitionedEvents(s, dir)
       val ev = s.read.parquet(path)
       val firstDay = ev.select(min(col("event_date"))).head().getDate(0)
       ev.filter(col("event_date") <= date_add(lit(firstDay), 2))
@@ -1182,7 +1138,7 @@ object RelationalQueries {
     // checkpointed so it is a real relation, not a constant-foldable
     // subtree.
     "q91_dpp" -> ((s, dir) => {
-      val path = ensurePartitionedEvents(s, dir)
+      val path = partitionedEvents(s, dir)
       val ev = s.read.parquet(path)
       val w = Window.orderBy(col("event_date"))
       val dim = ev.select(col("event_date")).distinct()
@@ -1389,7 +1345,7 @@ object RelationalQueries {
     // PARQUET original, so a hash match proves the parquet→ORC→query
     // round-trip is value-exact, types included.
     "q106_orc_scan" -> ((s, dir) => {
-      val path = ensureOrcEvents(s, dir)
+      val path = orcEvents(s, dir)
       s.read.orc(path)
         .filter(col("event_type") === "purchase" && col("value") > 100.0)
         .groupBy(to_date(col("ts")).as("__day"))

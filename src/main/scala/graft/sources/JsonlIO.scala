@@ -39,8 +39,8 @@ object JsonlIO {
     df.write.mode("overwrite").json(path)
 
   /** The deterministic JSONL corpus fixture behind q83 (the q32
-    * multimodal pattern: built on first touch at a sf-keyed tmp path
-    * the DuckDB oracle also reads). Every field derives from `id`
+    * multimodal pattern: a fixture keyed by its row count, built on first
+    * touch, that the DuckDB oracle also reads). Every field derives from `id`
     * alone, so both engines agree on the expected aggregate without
     * sharing anything but the file.
     */
@@ -50,26 +50,20 @@ object JsonlIO {
     StructField("lang", StringType),
     StructField("meta", StructType(Seq(StructField("src", StringType))))))
 
-  def fixtureJsonl(spark: SparkSession, dir: String, n: Long): String = {
-    // Hadoop FS, not java.io.File: the write above goes through Spark
-    // and works on any FS; a local-only existence probe is always
-    // false on HDFS/object stores, so every call re-ran the overwrite
-    // (racing concurrent readers and timing the write, not the scan)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_SUCCESS")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(marker)) {
-      val langs = array(lit("en"), lit("fr"), lit("de"), lit("es"), lit("pt"))
-      val df = spark.range(n).select(
-        col("id"),
-        concat(lit("doc "), col("id"), lit(" "),
-          array_join(array_repeat(
-            concat(lit("tok"), pmod(col("id"), lit(7))),
-            (pmod(col("id"), lit(13)) + 1).cast("int")), " ")).as("text"),
-        element_at(langs, (pmod(col("id"), lit(5)) + 1).cast("int")).as("lang"),
-        struct(when(pmod(col("id"), lit(3)) === 0, lit("web"))
-          .otherwise(lit("book")).as("src")).as("meta"))
-      write(df, dir)
-    }
-    dir
+  def writeFixture(spark: SparkSession, n: Long, out: String): Unit = {
+    val langs = array(lit("en"), lit("fr"), lit("de"), lit("es"), lit("pt"))
+    write(spark.range(n).select(
+      col("id"),
+      concat(lit("doc "), col("id"), lit(" "),
+        array_join(array_repeat(
+          concat(lit("tok"), pmod(col("id"), lit(7))),
+          (pmod(col("id"), lit(13)) + 1).cast("int")), " ")).as("text"),
+      element_at(langs, (pmod(col("id"), lit(5)) + 1).cast("int")).as("lang"),
+      struct(when(pmod(col("id"), lit(3)) === 0, lit("web"))
+        .otherwise(lit("book")).as("src")).as("meta")), out)
   }
+
+  /** [[writeFixture]] once per row count as a fixture; its directory. */
+  def fixtureJsonl(spark: SparkSession, n: Long): String =
+    graft.util.Fixture.generated("jsonl", 1, n)(writeFixture(spark, n, _))
 }

@@ -1,6 +1,6 @@
 package graft.util
 
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
 import scala.concurrent.duration.Duration
 import scala.util.Try
 
@@ -19,8 +19,13 @@ object Par {
     */
   def mapAll[A, B](items: Seq[A])(f: A => B): Seq[B] = {
     implicit val ec: ExecutionContext = ExecutionContext.global
+    // `blocking`: each `f` parks its pool thread in SparkContext.runJob,
+    // so the global pool adds threads for other work while it waits —
+    // the tasks of those jobs submit their own futures (the GraphSAGE
+    // kernels) to this same pool, and with one item per pool thread
+    // they would otherwise queue forever behind the parked waits
     val tries = Await.result(
-      Future.sequence(items.map(a => Future(Try(f(a))))), Duration.Inf)
+      Future.sequence(items.map(a => Future(Try(blocking(f(a)))))), Duration.Inf)
     tries.map(_.get)
   }
 }

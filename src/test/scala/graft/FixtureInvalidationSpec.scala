@@ -1,16 +1,19 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The ensure* fixture caches (z-ordered events, manifest copy, daily
-  * sketch table, bucketed tables, IVF-PQ index) are per-(process, sf)
-  * memos over DERIVED artifacts; the corpus itself is driver-owned and
-  * has already been regenerated under the repo once (round 8). This
-  * spec pins the invalidation contract: the cache key includes
-  * `Tables.corpusFingerprint`, so a corpus regeneration MID-SESSION
-  * rebuilds the artifact instead of serving rows from the previous
-  * generation.
+/** Every derived artifact the queries read back (layout copies of
+  * `events`, bucketed tables, sketch tables, the IVF / IVF-PQ / BM25 /
+  * LM indexes, fitted models) is a `util.Fixture` whose key includes
+  * `Tables.corpusFingerprint` of the corpus dir. The corpus itself is
+  * driver-owned and has already been regenerated under the repo once,
+  * so this spec pins the invalidation contract: a corpus regeneration
+  * in place, or a second corpus in another dir — whatever the dir is
+  * called — resolves to a new fixture instead of serving artifacts
+  * derived from another corpus, and the fixtures of a deleted corpus
+  * dir do not outlive the next fixture build.
   */
 class FixtureInvalidationSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.local(4, "fixture-invalidation-spec")
@@ -62,5 +65,84 @@ class FixtureInvalidationSpec extends AnyFunSuite {
     val n2 = q54(spark, dir).agg(sum(col("n_events"))).head().getLong(0)
     assert(n2 == 9L,
       s"stale fixture served after corpus regen: expected 9 events, got $n2")
+  }
+
+  private def writeEmbeddings(dir: String, seed: Long): Unit = {
+    import spark.implicits._
+    val rng = new scala.util.Random(seed)
+    (0 until 40).map(i => (i.toLong, Array.fill(Tables.EmbeddingDim)(rng.nextGaussian().toFloat), 0))
+      .toDF("vec_id", "embedding", "label")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+  }
+
+  /** q143 computed from the corpus directly, with no fixture. */
+  private def q143Direct(dir: String): Set[Row] = {
+    import graft.llm.IvfIncremental.{assignBatch, driftAudit, trainStats}
+    val emb = Tables(spark, dir).embeddings
+    val cent = emb.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("cvec"))
+    val batch = emb.select((col("vec_id") + 100000L).as("vec_id"),
+      reverse(col("embedding")).as("embedding"))
+    driftAudit(assignBatch(batch, cent), trainStats(assignBatch(emb, cent))).collect().toSet
+  }
+
+  test("q143's IVF index fixture follows the corpus, whatever its dir is called") {
+    val q143 = SparkEntry.queries("q143_ivf_drift")
+    val a = TempWarehouse.dir("graft-llm-corpus-a")
+    val b = TempWarehouse.dir("graft-llm-corpus-b")
+    writeEmbeddings(a, 1L)
+    writeEmbeddings(b, 2L)
+    val expectA = q143Direct(a)
+    val expectB = q143Direct(b)
+    assert(expectA != expectB, "the two corpora must give different audits")
+    assert(q143(spark, a).collect().toSet == expectA)
+    assert(q143(spark, b).collect().toSet == expectB,
+      "second corpus served the first corpus's IVF index")
+
+    // regenerate corpus a in place with b's content
+    writeEmbeddings(a, 2L)
+    bumpMtimes(a, 10000L)
+    assert(q143(spark, a).collect().toSet == expectB,
+      "stale IVF index served after an in-place corpus regeneration")
+  }
+
+  test("a corpus fixture is removed once its corpus dir is gone") {
+    import java.nio.file.{Files, Path, Paths}
+    val gone = TempWarehouse.dir("graft-fx-gone")
+    writeEvents(gone, 4)
+    val fx = Paths.get(graft.util.Fixture.corpus("spec_gone", 1, gone)(_ => ()))
+    assert(Files.isDirectory(fx))
+    val s = Files.walk(Paths.get(gone))
+    try s.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+    finally s.close()
+    // the next corpus fixture built, for any corpus, sweeps it
+    val live = TempWarehouse.dir("graft-fx-live")
+    writeEvents(live, 4)
+    graft.util.Fixture.corpus("spec_live", 1, live)(_ => ())
+    assert(!Files.exists(fx), "fixture of a deleted corpus dir survived the next build")
+  }
+}
+
+/** `SparkEntry.oracleSql` runs in a process that has built no fixture
+  * (a benchmark dumps the oracles of corpus-only queries this way): a
+  * fresh JVM evaluates every entry.
+  */
+class OracleSqlFreshProcessSpec extends AnyFunSuite {
+  test("oracleSql evaluates every entry in a process that built no fixture") {
+    val java = s"${sys.props("java.home")}/bin/java"
+    val p = new ProcessBuilder(java, "-cp", sys.props("java.class.path"),
+      "graft.OracleSqlFreshProcessSpec").redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() == 0, out)
+    assert(out.linesIterator.contains(s"entries ${SparkEntry.oracleSql.size}"), out)
+  }
+}
+
+object OracleSqlFreshProcessSpec {
+  def main(args: Array[String]): Unit = {
+    val sql = SparkEntry.oracleSql
+    require(sql.values.forall(_.trim.nonEmpty), "empty oracle SQL")
+    println(s"entries ${sql.size}")
   }
 }

@@ -185,4 +185,14 @@ class CorpusDedupSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), s"all-pairs stage leaked:\n$plan")
     assert(!plan.contains("SinglePartition"), s"single-partition stage:\n$plan")
   }
+
+  test("threshold outside (0, 1] rejected by clean, cleanAgainst and nearDupPairs") {
+    val df = Seq((1L, "a b c d"), (2L, "a b c e")).toDF("doc_id", "text")
+    Seq(0.0, 1.5).foreach { t =>
+      intercept[IllegalArgumentException](CorpusDedup.clean(df, "doc_id", "text", threshold = t))
+      intercept[IllegalArgumentException](
+        CorpusDedup.cleanAgainst(df, df, "doc_id", "text", threshold = t))
+      intercept[IllegalArgumentException](NearDup.nearDupPairs(df, "doc_id", "text", threshold = t))
+    }
+  }
 }

@@ -11,11 +11,16 @@ import org.apache.spark.sql.functions._
 class PhashNearDupSpec extends SparkSpec {
   import spark.implicits._
 
+  // the inputs are written fresh on every run (never a cached fixture),
+  // so the codec and the decoder run on every run too
   private lazy val tmp =
     java.nio.file.Files.createTempDirectory("graft-phash").toString
-  private lazy val fixture = Multimodal.imageFixtureParquet(spark, s"$tmp/img", 60)
-  private lazy val decoded = Multimodal.decodedRasterParquet(
-    spark, s"$tmp/dec", fixture, new Multimodal.RealDecoder(8)).cache()
+  private def decodeFresh(write: String => Unit, name: String) = {
+    write(s"$tmp/$name")
+    Multimodal.decodeFeatures(spark.read.parquet(s"$tmp/$name"), new Multimodal.RealDecoder(8))
+      .select(col("id"), col("feature")).cache()
+  }
+  private lazy val decoded = decodeFresh(Multimodal.writeImages(spark, 60, 42L, _), "img")
 
   private def refSig(feature: scala.collection.Seq[Float]): Long = {
     val q = feature.map(x => math.round(x.toDouble * 1000000))
@@ -61,10 +66,7 @@ class PhashNearDupSpec extends SparkSpec {
     assert(got === brute)
   }
 
-  private lazy val audioDecoded = Multimodal.decodedRasterParquet(
-    spark, s"$tmp/adec",
-    Multimodal.audioFixtureParquet(spark, s"$tmp/wav", 60),
-    new Multimodal.RealDecoder(8)).cache()
+  private lazy val audioDecoded = decodeFresh(Multimodal.writeAudio(spark, 60, 42L, _), "wav")
 
   test("audio: WAV fixture decodes through javax.sound; planted structure pairs exactly") {
     val rows = audioDecoded.collect()

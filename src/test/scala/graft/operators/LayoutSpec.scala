@@ -35,6 +35,21 @@ class LayoutSpec extends SparkSpec {
     Layout.dropBucketed(spark, "graft_bkt_agg")
   }
 
+  test("writeBucketed at a location: files survive DROP and re-register bucketed") {
+    val loc = s"${graft.TempWarehouse.dir("graft-bkt-ext")}/t"
+    val a = spark.range(0, 1000).select(col("id").as("k"), (col("id") * 2).as("va"))
+    Layout.writeBucketed(a, "graft_bkt_ext", buckets = 4, keys = Seq("k"), location = Some(loc))
+    spark.sql("DROP TABLE graft_bkt_ext")
+    assert(new java.io.File(loc).list().exists(_.endsWith(".parquet")), "DROP removed the files")
+    spark.sql(s"CREATE TABLE graft_bkt_ext2 (${a.schema.toDDL}) USING parquet " +
+      s"CLUSTERED BY (k) SORTED BY (k) INTO 4 BUCKETS LOCATION '$loc'")
+    val agged = spark.table("graft_bkt_ext2").groupBy("k").agg(sum("va").as("s"))
+    val plan = agged.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"re-registered bucketed groupBy shuffled:\n$plan")
+    assert(agged.count() === 1000L)
+    spark.sql("DROP TABLE graft_bkt_ext2")
+  }
+
   test("writeBucketed is idempotent across processes (stale location, fresh catalog)") {
     // The exact state a SECOND JVM on the same machine sees: the managed
     // table's location survives in the warehouse directory while the

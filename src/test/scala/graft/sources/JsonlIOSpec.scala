@@ -37,7 +37,7 @@ class JsonlIOSpec extends SparkSpec {
 
   test("fixture is deterministic and id-derivable (the q83 oracle contract)") {
     val dir = graft.TempWarehouse.dir("graft-jsonl-fx")
-    JsonlIO.fixtureJsonl(spark, s"$dir/fx", 60L)
+    JsonlIO.writeFixture(spark, 60L, s"$dir/fx")
     val rows = JsonlIO.read(spark, s"$dir/fx", JsonlIO.FixtureSchema)
       .select(col("id"), col("lang"), col("meta.src"), length(col("text")).as("len"))
       .as[(Long, String, String, Int)].collect().sortBy(_._1)
@@ -45,9 +45,13 @@ class JsonlIOSpec extends SparkSpec {
     assert(rows(0) == (0L, "en", "web", 10),
       s"id 0 must be ('doc 0 tok0', en, web), got ${rows(0)}")
     assert(rows(7)._2 == "de" && rows(7)._3 == "book")
-    // second call is a no-op (the _SUCCESS marker gates the build)
-    val m = new java.io.File(s"$dir/fx/_SUCCESS").lastModified
-    JsonlIO.fixtureJsonl(spark, s"$dir/fx", 60L)
-    assert(new java.io.File(s"$dir/fx/_SUCCESS").lastModified == m)
+  }
+
+  test("fixtureJsonl reuses its directory: a second call is a no-op") {
+    val fx = JsonlIO.fixtureJsonl(spark, 60L)
+    assert(JsonlIO.read(spark, fx, JsonlIO.FixtureSchema).count() == 60L)
+    val m = new java.io.File(s"$fx/_SUCCESS").lastModified
+    assert(JsonlIO.fixtureJsonl(spark, 60L) == fx)
+    assert(new java.io.File(s"$fx/_SUCCESS").lastModified == m)
   }
 }
